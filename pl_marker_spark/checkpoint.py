@@ -112,7 +112,17 @@ class CheckpointStore:
         read of the same files — correct, just re-shuffling — because the
         in-memory catalog (no metastore in this sandbox) forgets bucket
         metadata; with a real catalog (Iceberg/Hive) the metadata persists
-        and the fallback never triggers."""
+        and the fallback never triggers.
+
+        The bucket count is the session's cores
+        (``sparkContext.defaultParallelism``: N under ``local[N]``, the
+        executor cores on a cluster), not ``spark.sql.shuffle.partitions``:
+        it fixes the task count of the write and of every bucketed read
+        downstream, and AQE can merge neither — the scan's partitioning IS
+        the bucket spec, and the ``repartition(n, key)`` before the write
+        has an explicit count. Each task pays a Python worker's setup, so
+        one bucket per core writes one file per core and reads in one
+        wave."""
         if self.table_format == "iceberg":
             return self._stage_iceberg(name, build, sort_within)
         path = self._path(name)
@@ -129,7 +139,7 @@ class CheckpointStore:
         if sort_within:
             df = df.sortWithinPartitions(*sort_within)
         if bucket_by:
-            n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            n_buckets = self.spark.sparkContext.defaultParallelism
             # One exchange on the bucket key BEFORE the bucketed write
             # (round-6, guide §6): without it every write task emits one
             # file per bucket it touches — n_tasks × n_buckets files (1024

@@ -2088,16 +2088,11 @@ def q_kg_edge_intervals(spark, sf_dir):
     (determinism + python-reference equality pinned in
     tests/test_edge_intervals_determinism). Twin: the same islands
     derived via SQL window functions in DuckDB — textbook
-    gaps-and-islands, BUT the twin computes its two window passes over a
-    non-unique ORDER BY in separate CTEs, and DuckDB 1.0.0's parallel
-    window execution can order tied rows differently between the passes
-    under CPU contention: the round-5 "ghost" mismatch. Root-caused in
-    round 6 (tools/ghost_stress.py: Spark 50/50 stable, DuckDB 3/50
-    divergent with an island spanning a >2 h gap — the twin's own CASE
-    rule violated, so the twin's evaluation moved, not this query). The
-    oracle SQL text is frozen; any gate mismatch on this row that shows
-    an island id 0 or an island spanning more than _GAP_US is that
-    engine-side artifact — rerun on a fresh connection."""
+    gaps-and-islands over each edge's DISTINCT offsets, joined back to
+    the events. Its two window passes run in separate CTEs, and DuckDB's
+    parallel window execution may order tied rows differently between
+    them; over distinct offsets the ORDER BY is total within each edge,
+    so no tie can move a flag into the wrong island."""
     from pyspark.sql import Window
 
     out = _pipeline_outputs(spark, sf_dir)
@@ -3336,11 +3331,12 @@ ev AS (SELECT res.src_id, res.dst_id, res.pred,
        FROM res JOIN tu ON res.conv_id = tu.conv_id
                        AND res.turn_idx = tu.turn_idx
        CROSS JOIN t0),
+dist AS (SELECT DISTINCT src_id, dst_id, pred, off_us FROM ev),
 lag AS (SELECT src_id, dst_id, pred, off_us,
                lag(off_us) OVER (
                  PARTITION BY src_id, dst_id, pred
                  ORDER BY off_us) AS prev_us
-        FROM ev),
+        FROM dist),
 isl AS (SELECT src_id, dst_id, pred, off_us,
                sum(CASE WHEN prev_us IS NULL
                           OR off_us - prev_us > 7200000000
@@ -3350,11 +3346,13 @@ isl AS (SELECT src_id, dst_id, pred, off_us,
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS interval_idx
         FROM lag)
-SELECT src_id, dst_id, pred, interval_idx::BIGINT AS interval_idx,
-       min(off_us)::BIGINT AS start_off_us,
-       max(off_us)::BIGINT AS end_off_us,
+SELECT ev.src_id, ev.dst_id, ev.pred, isl.interval_idx::BIGINT AS interval_idx,
+       min(ev.off_us)::BIGINT AS start_off_us,
+       max(ev.off_us)::BIGINT AS end_off_us,
        count(*)::BIGINT AS n_events
-FROM isl GROUP BY src_id, dst_id, pred, interval_idx
+FROM ev JOIN isl ON ev.src_id = isl.src_id AND ev.dst_id = isl.dst_id
+                AND ev.pred = isl.pred AND ev.off_us = isl.off_us
+GROUP BY ev.src_id, ev.dst_id, ev.pred, isl.interval_idx
 """
 
 

@@ -20,13 +20,6 @@ def get_spark(
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # python-kernel stages are CPU-heavy per byte; tune down (e.g. 16m)
-        # when AQE coalescing leaves too few tasks per wave
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_ADVISORY_PARTITION", "64m"))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_ARROW_BATCH", "2048"))

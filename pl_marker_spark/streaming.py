@@ -125,7 +125,8 @@ def _make_state_handler(cfg: PipelineConfig, orphan_timeout_ms: int):
                     texts.append(r.text)
         if not done:
             state.update((turn_ids, texts))
-            state.setTimeoutDuration(orphan_timeout_ms)
+            state.setTimeoutTimestamp(
+                state.getCurrentProcessingTimeMs() + orphan_timeout_ms)
             return iter(())
         state.remove()
         order = sorted(range(len(turn_ids)), key=lambda i: turn_ids[i])
@@ -159,15 +160,27 @@ def stream_extract_stateful(
     micro-batches at or before the one carrying its ``__end__`` marker
     (turn order *within* batches is free — state sorts by turn_idx).
     Turns arriving after the end marker re-create state that will never see
-    another marker; such orphans are dropped after ``orphan_timeout_ms`` of
-    processing-time inactivity so the state store stays bounded."""
-    stream = read_transcript_stream(spark, input_dir)
+    another marker; such orphans are dropped once the stream has run
+    ``orphan_timeout_ms`` of micro-batches past the conversation's last
+    arrival, so the state store stays bounded.
+
+    The timeout is an event-time timeout on the rows' ARRIVAL time (the
+    micro-batch timestamp), watermarked with no delay. A processing-time
+    timeout makes Spark ask for another no-data batch after every batch,
+    so an ``availableNow`` query never ends; an event-time timeout asks
+    only while the watermark moves, so the query ends once the input is
+    drained. The watermark is on arrival, not on ``ts``: Spark drops rows
+    older than the watermark before the state function sees them, and a
+    feed interleaves conversations hours apart in ``ts``, whereas no row
+    ever arrives before an earlier batch."""
+    stream = read_transcript_stream(spark, input_dir).withColumn(
+        "_arrival", F.current_timestamp()).withWatermark("_arrival", "0 seconds")
     extracted = stream.groupBy("conv_id").applyInPandasWithState(
         _make_state_handler(cfg, orphan_timeout_ms),
         outputStructType=TRIPLE_STREAM_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     return (
         extracted.writeStream.format("parquet")

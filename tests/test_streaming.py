@@ -80,7 +80,11 @@ def test_stateful_stream_conversations_span_batches(spark, corpus, tmp_path_fact
     outdir = str(tmp_path_factory.mktemp("sstream_out"))
     _write_chunks(corpus, indir, with_end_markers=True, split_convs=True)
     q = stream_extract_stateful(spark, indir, outdir, DEFAULT_CONFIG)
-    q.awaitTermination(300)
+    try:
+        # availableNow must end by itself once the input is drained
+        assert q.awaitTermination(60) is True
+    finally:
+        q.stop()
     got = {
         (r.conv_id, r.turn_idx, r.s1, r.e1, r.s2, r.e2, r.pred,
          r.subj_type, r.obj_type)
@@ -89,11 +93,31 @@ def test_stateful_stream_conversations_span_batches(spark, corpus, tmp_path_fact
     assert got == _expected_triples(corpus)
 
 
+def test_stateful_stream_drops_orphans_as_stream_advances(
+        spark, corpus, tmp_path_factory):
+    """Conversations that never send an end marker emit nothing, and their
+    state is evicted once a later batch moves the arrival watermark past
+    their timeout: the first file's conversations are gone after the
+    second file; the second file's wait for more input."""
+    indir = str(tmp_path_factory.mktemp("orphan_in"))
+    outdir = str(tmp_path_factory.mktemp("orphan_out"))
+    _write_chunks(corpus, indir, with_end_markers=False, split_convs=False)
+    q = stream_extract_stateful(spark, indir, outdir, DEFAULT_CONFIG,
+                                orphan_timeout_ms=1)
+    try:
+        assert q.awaitTermination(60) is True
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    finally:
+        q.stop()
+    assert state_rows == N_CONVS - N_CONVS // 2
+    assert spark.read.parquet(f"{outdir}/triples").count() == 0
+
+
 def test_stateful_handler_orphan_timeout_drops_state():
     """Orphaned partial conversations (turns after their end marker, or a
-    feed that never sends one) are dropped on processing-time timeout so
-    the state store stays bounded (round-1 ADVICE). Exercised directly on
-    the handler with a fake GroupState — the availableNow test triggers
+    feed that never sends one) are dropped on their arrival-time timeout
+    so the state store stays bounded (round-1 ADVICE). Exercised directly
+    on the handler with a fake GroupState — the availableNow test triggers
     can't fire a timeout deterministically."""
     import pandas as pd
 
@@ -117,7 +141,10 @@ def test_stateful_handler_orphan_timeout_drops_state():
         def update(self, v):
             self.updated = v
 
-        def setTimeoutDuration(self, ms):
+        def getCurrentProcessingTimeMs(self):
+            return 5000
+
+        def setTimeoutTimestamp(self, ms):
             self.timeout_ms = ms
 
     handler = _make_state_handler(DEFAULT_CONFIG, orphan_timeout_ms=1234)
@@ -134,7 +161,8 @@ def test_stateful_handler_orphan_timeout_drops_state():
         columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
     )
     out2 = list(handler(("cZ",), iter([pdf]), st2))
-    assert out2 == [] and st2.updated is not None and st2.timeout_ms == 1234
+    assert out2 == [] and st2.updated is not None
+    assert st2.timeout_ms == 5000 + 1234
 
 
 def test_stream_dedup_exact(spark, tmp_path_factory):

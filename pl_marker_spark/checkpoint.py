@@ -95,9 +95,8 @@ class CheckpointStore:
 
         return f"ck_{zlib.crc32(self.base.encode()) & 0xFFFFFFFF:08x}_{name}"
 
-    def stage(self, name: str, build, sort_within: list[str] | None = None,
-              bucket_by: list[str] | None = None,
-              partition_by: list[str] | None = None) -> DataFrame:
+    def stage(self, name: str, build,
+              bucket_by: list[str] | None = None) -> DataFrame:
         """Run ``build()`` unless the checkpoint already exists; either way
         return the checkpointed DataFrame (so downstream stages always read
         a materialized, resumable table).
@@ -124,7 +123,7 @@ class CheckpointStore:
         one bucket per core writes one file per core and reads in one
         wave."""
         if self.table_format == "iceberg":
-            return self._stage_iceberg(name, build, sort_within)
+            return self._stage_iceberg(name, build)
         path = self._path(name)
         tbl = self._bucket_table(name) if bucket_by else None
         if self.is_complete(name):
@@ -136,8 +135,6 @@ class CheckpointStore:
             return self.spark.read.parquet(path)
         t0 = time.time()
         df = build()
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
         if bucket_by:
             n_buckets = self.spark.sparkContext.defaultParallelism
             # One exchange on the bucket key BEFORE the bucketed write
@@ -153,15 +150,6 @@ class CheckpointStore:
             (df.write.mode("overwrite")
                .bucketBy(n_buckets, *bucket_by).sortBy(*bucket_by)
                .option("path", path).format("parquet").saveAsTable(tbl))
-        elif partition_by:
-            # hive-style directory partitioning: a low-cardinality
-            # discriminator column (e.g. the extract union's `kind`)
-            # becomes a partition directory, so each downstream
-            # kind-filtered read is partition PRUNING, not row filtering —
-            # measured 1.25→0.68 s (mentions) / 0.58→0.44 s (triples)
-            # reads at 20k convs, equal bytes on disk (round-3 VERDICT
-            # item #8)
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
         else:
             df.write.mode("overwrite").parquet(path)
         if self.fingerprint is not None:
@@ -206,15 +194,13 @@ class CheckpointStore:
             parts.append({"partition_id": len(parts), "rows": n, "file": fn})
         return parts
 
-    def _stage_iceberg(self, name: str, build, sort_within):
+    def _stage_iceberg(self, name: str, build):
         table = self._table(name)
         if self.is_complete(name):
             self._log(name, resumed=True, rows=None, secs=0.0)
             return self.spark.read.table(table)
         t0 = time.time()
         df = build()
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
         df.writeTo(table).createOrReplace()
         out = self.spark.read.table(table)
         rows = out.count()

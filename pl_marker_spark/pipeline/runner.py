@@ -36,15 +36,24 @@ def run_extraction(
     granularity: str = "fine",
 ) -> dict[str, DataFrame]:
     """Run transcripts → triples. With a CheckpointStore each stage is
-    materialized + resumable; without one the plan stays lazy end-to-end.
+    materialized + resumable; without one, the stages the coarse profile
+    materializes are pinned in memory instead (eager ``localCheckpoint``;
+    the refined-type map lazily, as with a store) and the rest stay lazy,
+    so a store-less plan never evaluates a stage twice: each consumer of
+    ``triples``, ``mentions`` or ``mentions_refined`` reads the pinned
+    tables, not a re-run of the grouped-map kernels (the streaming sinks
+    write two or more outputs of one micro-batch this way). Pinning
+    ``turns_tok`` on-heap was measured at ~2x e2e at 10^6 turns (below),
+    so a one-shot run at that scale should pass a CheckpointStore.
 
-    granularity: "fine" checkpoints every intermediate (best resume
-    resolution, used by tests); "coarse" parquet-checkpoints only the
-    north-rule-mandated stage boundaries (span-pack → packed_ner, NER →
-    mentions, RE → triples; link/canonicalize are in build_graph), pins
-    multi-consumer intermediates in memory, and leaves single-consumer
-    stages lazy — the production/bench configuration (round-1 VERDICT
-    item #3: every extra parquet barrier is serial driver floor).
+    granularity (with a store): "fine" checkpoints every intermediate
+    (best resume resolution, used by tests); "coarse" parquet-checkpoints
+    only the north-rule-mandated stage boundaries (span-pack → packed_ner,
+    NER → mentions, RE → triples; link/canonicalize are in build_graph),
+    pins multi-consumer intermediates in memory, and leaves
+    single-consumer stages lazy — the production/bench configuration
+    (round-1 VERDICT item #3: every extra parquet barrier is serial
+    driver floor).
 
     Coarse materialization choices and why:
     - turns_tok (parquet): consumed by span-pack, RE repack and graph
@@ -62,26 +71,21 @@ def run_extraction(
                       "pair_scores", "extract"}
     coarse_mem = {"triples_raw"}
 
-    def ck(name: str, build, always: bool = False,
-           bucket_by: list[str] | None = None,
-           partition_by: list[str] | None = None):
-        if store is None:
-            return build()
-        if fine:
+    def ck(name: str, build, bucket_by: list[str] | None = None):
+        if store is not None and fine:
             return store.stage(name, build)
-        if name in coarse_parquet:
+        if store is not None and name in coarse_parquet:
             # bucketed stage boundaries only in the production (coarse)
             # profile: every conversation-keyed consumer then reads the
             # scan's own partitioning instead of re-shuffling the stage
-            return store.stage(name, build, bucket_by=bucket_by,
-                               partition_by=partition_by)
-        if name in coarse_mem:
+            return store.stage(name, build, bucket_by=bucket_by)
+        if name in coarse_parquet or name in coarse_mem:
             return build().localCheckpoint()
         return build()
 
     turns_tok = ck("turns_tok",
                    lambda: assemble(transcripts, cfg.tokenizer_family),
-                   always=True, bucket_by=["conv_id"])
+                   bucket_by=["conv_id"])
     # fused NER profile: windowing+enumeration+scoring+suppression in one
     # conversation-local pass (ner.spanpack_decode_ner) — packed_ner never
     # materializes. Applies only where the fused kernel is exactly
@@ -118,10 +122,8 @@ def run_extraction(
         # values). Two separate sinks are structurally out: one grouped
         # map emits one schema, so a second sink means a second pass over
         # the token arrays — the exact cost single-pass extraction
-        # exists to avoid. CheckpointStore keeps `partition_by` for
-        # read-dominated deployments.
-        ext = ck("extract", lambda: extract_single_pass(turns_tok, cfg),
-                 always=True)
+        # exists to avoid.
+        ext = ck("extract", lambda: extract_single_pass(turns_tok, cfg))
         mentions, triples_raw = split_extract(ext)
     elif ner_fused:
         from .ner import spanpack_decode_ner
@@ -132,7 +134,7 @@ def run_extraction(
         # cogroup downstream becomes exchange-free on BOTH sides
         mentions = ck("mentions",
                       lambda: spanpack_decode_ner(turns_tok, cfg),
-                      always=True, bucket_by=["conv_id"])
+                      bucket_by=["conv_id"])
     elif cfg.segment_turns > 0:
         from .repack import repack_re_segmented
         from .spanpack import spanpack_ner_segmented
@@ -140,15 +142,13 @@ def run_extraction(
         packed_ner = ck(
             "packed_ner",
             lambda: spanpack_ner_segmented(turns_tok, cfg, cfg.segment_turns),
-            always=True,
         )
     else:
-        packed_ner = ck("packed_ner", lambda: spanpack_ner(turns_tok, cfg),
-                        always=True)
+        packed_ner = ck("packed_ner", lambda: spanpack_ner(turns_tok, cfg))
     if not ner_fused:
         span_scores = ck("span_scores", lambda: infer_ner(packed_ner, cfg))
         mentions = ck("mentions", lambda: suppress_mentions(span_scores, cfg),
-                      always=True, bucket_by=["conv_id"])
+                      bucket_by=["conv_id"])
     if cfg.levitated_pairs:
         # C4 all-pairs levitated variant (run_levitatedpair.py:282-322):
         # forward-only decode, shared O6/O7 downstream; composes with
@@ -164,12 +164,10 @@ def run_extraction(
                 "packed_re",
                 lambda: repack_levitated_segmented(turns_tok, mentions, cfg,
                                                    cfg.segment_turns),
-                always=True,
             )
         else:
             packed_re = ck("packed_re",
-                           lambda: repack_levitated(turns_tok, mentions, cfg),
-                           always=True)
+                           lambda: repack_levitated(turns_tok, mentions, cfg))
         pair_scores = ck("pair_scores", lambda: decode_levitated(packed_re, cfg))
         decoded = pair_scores
     elif single_pass:
@@ -187,23 +185,19 @@ def run_extraction(
                 "triples_raw",
                 lambda: repack_decode_re_segmented(turns_tok, mentions, cfg,
                                                    cfg.segment_turns),
-                always=True,
             )
         else:
             triples_raw = ck(
                 "triples_raw", lambda: repack_decode_re(turns_tok, mentions, cfg),
-                always=True,
             )
     else:
         if cfg.segment_turns > 0:
             packed_re = ck(
                 "packed_re",
                 lambda: repack_re_segmented(turns_tok, mentions, cfg, cfg.segment_turns),
-                always=True,
             )
         else:
-            packed_re = ck("packed_re", lambda: repack_re(turns_tok, mentions, cfg),
-                           always=True)
+            packed_re = ck("packed_re", lambda: repack_re(turns_tok, mentions, cfg))
         pair_scores = ck("pair_scores", lambda: infer_pairs(packed_re, cfg))
         decoded = (
             decode_unidirect(pair_scores, mentions)
@@ -218,13 +212,10 @@ def run_extraction(
     # so the triples and mentions_refined outputs don't recompute it
     triples_df, refined_df = refine_types(
         triples_raw, mentions,
-        materialize=(
-            (lambda df: df.localCheckpoint(eager=False))
-            if store is not None else None
-        ),
+        materialize=lambda df: df.localCheckpoint(eager=False),
     )
-    triples = ck("triples", lambda: triples_df, always=True)
-    mentions_refined = ck("mentions_refined", lambda: refined_df, always=True)
+    triples = ck("triples", lambda: triples_df)
+    mentions_refined = ck("mentions_refined", lambda: refined_df)
     return {
         "turns_tok": turns_tok,
         "packed_ner": packed_ner,

@@ -285,3 +285,18 @@ def test_grouped_decode_tensor_head(spark):
 
     assert tset(run_extraction(spark, t, cfg_grp)) == \
         tset(run_extraction(spark, t, cfg_rel))
+
+
+def test_storeless_extraction_runs_its_grouped_map_once(spark):
+    """Without a CheckpointStore, run_extraction pins the stages the coarse
+    profile materializes, so consumers of its outputs read pinned tables:
+    on the production profile (single-pass fused NER + grouped RE) neither
+    ``triples`` nor ``mentions_refined`` re-runs the single-pass grouped
+    map. Left lazy, each output's plan held it twice, so every write of
+    an output re-ran extraction twice."""
+    cfg = replace(DEFAULT_CONFIG, ner_decode="fused", re_decode="grouped")
+    out = run_extraction(spark, synth.transcripts_df(spark, 4), cfg)
+    for name in ("triples", "mentions_refined"):
+        plan = out[name]._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" not in plan, name
+    assert out["triples"].count() > 0

@@ -2,10 +2,10 @@
 
 ``entry(spark)`` runs the flagship KG-extraction pipeline (transcripts →
 packed markers → mentions → fused triples) on a deterministic synthetic
-transcript corpus. ``queries()``/``oracle_sql()`` expose SQL-expressible
-operators from SURVEY.md §2 over the driver's parquet tables with DuckDB
-twins; model-dependent stages are covered by the pytest oracle
-(tests/test_pipeline_vs_oracle.py) and appear here as rows-only checks.
+transcript corpus. ``queries()``/``oracle_sql()`` expose the catalog's 70
+rows, each with a DuckDB twin: the KG pipeline's outputs and the queries
+over them (``kg_*``, twinned by the Python oracle rendered as VALUES) and
+the reference-semantics operators over the driver's parquet tables.
 """
 
 from __future__ import annotations

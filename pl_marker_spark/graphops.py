@@ -4,9 +4,9 @@ Complements the connected-components kernel (pipeline/cc.py): PageRank and
 triangle counting, both expressed as joins + map-side-combinable
 aggregations so they scale as a constant number of |E|-shuffles per pass.
 
-Semantics are pinned by tests against a pure-numpy reference
-(tests/test_analytics.py) and by the DuckDB chained-CTE twins in
-queries_analytics.py.
+Semantics are pinned by tests against pure-python/numpy references
+(tests/test_scoring_and_graph.py) and by the kg_* rows' DuckDB twins in
+queries_catalog.py.
 """
 
 from __future__ import annotations
@@ -89,9 +89,9 @@ def triangle_counts(edges: DataFrame, a: str = "doc_a",
     bound the wedge fan-out at hub nodes (same plan, different order).
     Returns (node, n_tri)."""
     # The edge list enters the wedge join THREE times; if it carries a
-    # non-trivial lineage (here: the whole shingle→jaccard near-dup
-    # pipeline) the 3-way self-join would re-evaluate that subtree up to
-    # 3x unless exchange reuse happens to fire. Materialize once — the
+    # non-trivial lineage (here: the pipeline that built the KG edges)
+    # the 3-way self-join would re-evaluate that subtree up to 3x unless
+    # exchange reuse happens to fire. Materialize once — the
     # canonical edge list is ids-only, tiny relative to its lineage.
     edges = edges.select(a, b).localCheckpoint()
     e1 = edges.select(F.col(a).alias("ta"), F.col(b).alias("tb"))
@@ -228,9 +228,8 @@ def bgp_person_org_place(edges: DataFrame, nodes: DataFrame) -> DataFrame:
         ?p ORG-AFF ?o .  ?p PHYS ?g .  OPTIONAL { ?o GEN-AFF ?g }
         ?p a PER .  ?o a ORG .  ?g a GPE .
 
-    Shared by the catalog row (queries_catalog.q_kg_bgp_match, over the
-    pipeline's constructed graph) and bench.py's bgp_400k leg (over a
-    deterministic 400k-edge graph with a closed-form answer). Inputs:
+    Used by the catalog row queries_catalog.q_kg_bgp_match, over the
+    pipeline's constructed graph. Inputs:
     edges (src_id, dst_id, pred, weight), nodes (entity_id,
     canonical_name, type). Returns one row per binding with canonical
     names, both edge supports and the closure flag.
@@ -272,9 +271,9 @@ def bgp_person_org_place(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
 def bounded_reachability(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     """Directed min-hops closure within ``max_hops`` — the SPARQL
-    property-path `p{1,k}` evaluator shared by the catalog row
-    (queries_catalog.q_kg_reachability, over the pipeline's constructed
-    graph) and bench.py's reach_400k leg (closed-form cycle graph).
+    property-path `p{1,k}` evaluator behind the catalog row
+    queries_catalog.q_kg_reachability (over the pipeline's constructed
+    graph).
     Input: edges with (src_id, dst_id); output (src_id, dst_id, hops)
     where hops is the SHORTEST directed path length ≤ max_hops.
 
@@ -627,9 +626,8 @@ def entity_cards(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     left un-hinted — AQE picks broadcast when the dim fits and a
     co-partitioned shuffle join when it doesn't. No window, no global
     sort — ordering lives INSIDE each card via array_sort.
-    Shared by queries_catalog.q_kg_entity_card (driver-gated vs a
-    string_agg(... ORDER BY item) DuckDB twin) and bench.py's
-    closed-form card_240k leg."""
+    Used by queries_catalog.q_kg_entity_card (driver-gated vs a
+    string_agg(... ORDER BY item) DuckDB twin)."""
     dim = nodes.select("entity_id", "canonical_name", "type")
     dst_name = dim.select(F.col("entity_id").alias("dst_id"),
                           F.col("canonical_name").alias("obj_name"))
@@ -664,9 +662,7 @@ def khop_subgraph(edges: DataFrame, n_seeds: int = 3, k: int = 2) -> DataFrame:
 
     100-TB shape: seeded BFS touches only the seed neighborhoods — the
     frontier is deduped per level (groupBy min-hops) and re-checkpointed
-    so plan depth stays flat (the bounded_reachability discipline; that
-    shape is bench-asserted at 400k edges in reach_400k, and the
-    degree-census + driver-side top-k seed selection in ppr_400k); the
+    so plan depth stays flat (the bounded_reachability discipline); the
     induced-edge step is two ids-only equi-joins of the edge list
     against the per-seed reach set — never an all-pairs expansion."""
     und = symmetrize(edges)

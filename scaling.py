@@ -3,11 +3,12 @@
 ≥0.8 between N and 4N executors; sandbox proxy = the same job at local[8]
 vs local[32] on identical input).
 
-Runs bench.py as a subprocess at both parallelism levels, computes
-efficiency = (throughput_32 / throughput_8) / 4 on the end-to-end
-triples/sec, and appends the result to BENCH.md.
+Runs one timed ``run_full_pipeline`` pass (``leg``) in a child process at
+both parallelism levels, computes efficiency =
+(throughput_32 / throughput_8) / 4 on the end-to-end triples/sec, and
+appends the result to BENCH.md.
 
-Usage: python scaling.py [sf_dir]
+Usage: python scaling.py
 """
 
 from __future__ import annotations
@@ -17,31 +18,51 @@ import os
 import shutil
 import subprocess
 import sys
+import tempfile
+import time
+from dataclasses import replace
 from datetime import datetime, timezone
 
-
-def _loadavg() -> float:
-    return os.getloadavg()[0]
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
-def run_at(cpus: int, sf_dir: str) -> dict:
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir)
-    # scaling runs use a corpus big enough to be compute-bound at the high
-    # leg. Round-3's single-pass extraction halved parallel work per conv
-    # (P≈0.009 core-sec/conv at the 8-core leg) against a ~23s serial
-    # floor, so the round-2 calibration (120k convs) drifted out of the
-    # compute-bound regime (measured 0.764 at 120k vs 0.909 at 240k —
-    # BENCH.md "fixed-size corpus recalibration"); 240k restores the
-    # margin. The corpus grows with code speed by design: the north rule
-    # is throughput scaling at 10^12-turn scale, not at a toy size an
-    # optimization has outgrown.
-    env.setdefault("SPARK_GRAFT_CONVS", "240000")
-    # legs compare the flagship pipeline; one rep per invocation (the
-    # harness's own alternating reps are the best-of control) and no
-    # catalog/at-scale side entries, which would triple leg wall time
-    # without informing the ratio
-    env.setdefault("SPARK_GRAFT_BENCH_SECTIONS", "e2e")
-    env.setdefault("SPARK_GRAFT_BENCH_REPS", "1")
+def leg() -> None:
+    """One timed pass over SPARK_GRAFT_CONVS synthetic conversations on
+    local[SPARK_GRAFT_CPUS]; prints one JSON line. Input materialization
+    is untimed: the timed section is read → extract → link → canonicalize
+    → graph with the production profile and coarse checkpoints."""
+    from pl_marker_spark import synth
+    from pl_marker_spark.checkpoint import CheckpointStore
+    from pl_marker_spark.config import DEFAULT_CONFIG
+    from pl_marker_spark.pipeline.runner import run_full_pipeline
+    from pl_marker_spark.session import get_spark
+
+    n_convs = int(os.environ["SPARK_GRAFT_CONVS"])
+    spark = get_spark(app="pl-marker-scaling")
+    spark.sparkContext.setLogLevel("ERROR")
+    workdir = tempfile.mkdtemp(prefix="plm_scaling_")
+    try:
+        tdir = f"{workdir}/transcripts"
+        synth.transcripts_df(spark, n_convs).write.parquet(tdir)
+        transcripts = spark.read.parquet(tdir)
+        cfg = replace(DEFAULT_CONFIG, re_decode="grouped", ner_decode="fused")
+        store = CheckpointStore(spark, f"{workdir}/ck", run_id="scaling")
+        t0 = time.time()
+        out = run_full_pipeline(spark, transcripts, cfg, store,
+                                granularity="coarse")
+        n_triples = out["triples"].count()
+        out["edges"].count()
+        dt = time.time() - t0
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+    print(json.dumps({"e2e_sec": round(dt, 3), "triples": n_triples,
+                      "triples_per_sec": round(n_triples / dt, 2)}))
+    spark.stop()
+
+
+def run_at(cpus: int, n_convs: int) -> dict:
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
+               SPARK_GRAFT_CONVS=str(n_convs))
     env.setdefault("SPARK_DRIVER_MEM", "12g")
     env.setdefault("SPARK_SHUFFLE_PARTITIONS", "128")
     env.setdefault("SPARK_ARROW_BATCH", "8192")
@@ -50,25 +71,20 @@ def run_at(cpus: int, sf_dir: str) -> dict:
     # (plus JVM GC/shuffle threads) would spread over every core of the host,
     # inflating the small-N baseline and understating true scaling. Affinity
     # makes each leg an honest N-core-executor proxy.
-    cmd = [sys.executable, "bench.py"]
+    cmd = [sys.executable, "-c", "import scaling; scaling.leg()"]
     if shutil.which("taskset"):
         cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
-    out = subprocess.run(
-        cmd, env=env, capture_output=True, text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
-    )
+    out = subprocess.run(cmd, env=env, capture_output=True, text=True,
+                         cwd=HERE)
     if out.returncode != 0:
         sys.stderr.write(out.stderr[-4000:])
-        raise SystemExit(f"bench.py failed at {cpus} cores "
+        raise SystemExit(f"scaling leg failed at {cpus} cores "
                          f"(exit {out.returncode}); stderr tail above")
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(line)
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
     # default legs 8→32; SPARK_GRAFT_CORES_LO/HI select another N→4N pair
     # (e.g. 2→8) — on this shared-bandwidth host the high leg saturates the
     # memory path (see BENCH.md ceilings), so a lower pair isolates the
@@ -81,46 +97,54 @@ def main() -> None:
     # minimum is the least-interfered estimate. Leg order alternates to
     # decorrelate slow host drift; ambient load is recorded per sample.
     reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "1"))
+    # scaling runs use a corpus big enough to be compute-bound at the high
+    # leg. Round-3's single-pass extraction halved parallel work per conv
+    # (P≈0.009 core-sec/conv at the 8-core leg) against a ~23s serial
+    # floor, so the round-2 calibration (120k convs) drifted out of the
+    # compute-bound regime (measured 0.764 at 120k vs 0.909 at 240k —
+    # BENCH.md "fixed-size corpus recalibration"); 240k restores the
+    # margin. The corpus grows with code speed by design: the north rule
+    # is throughput scaling at 10^12-turn scale, not at a toy size an
+    # optimization has outgrown.
+    n_convs = int(os.environ.get("SPARK_GRAFT_CONVS", "240000"))
     samples: dict[int, list[dict]] = {lo: [], hi: []}
     loads: dict[int, list[float]] = {lo: [], hi: []}
     for rep in range(reps):
         order = (lo, hi) if rep % 2 == 0 else (hi, lo)
         for cpus in order:
-            loads[cpus].append(round(_loadavg(), 1))
-            samples[cpus].append(run_at(cpus, sf_dir))
-    r_lo = min(samples[lo], key=lambda r: r["queries"]["kg_pipeline_e2e"])
-    r_hi = min(samples[hi], key=lambda r: r["queries"]["kg_pipeline_e2e"])
+            loads[cpus].append(round(os.getloadavg()[0], 1))
+            samples[cpus].append(run_at(cpus, n_convs))
+    r_lo = min(samples[lo], key=lambda r: r["e2e_sec"])
+    r_hi = min(samples[hi], key=lambda r: r["e2e_sec"])
     thr_lo = r_lo["triples_per_sec"]
     thr_hi = r_hi["triples_per_sec"]
     eff = (thr_hi / thr_lo) / (hi / lo)
-    wall_eff = (r_lo["queries"]["kg_pipeline_e2e"] / r_hi["queries"]["kg_pipeline_e2e"]) / (hi / lo)
+    wall_eff = (r_lo["e2e_sec"] / r_hi["e2e_sec"]) / (hi / lo)
     result = {
-        "sf_dir": sf_dir,
+        "convs": n_convs,
         "cores_lo": lo,
         "cores_hi": hi,
         "triples": r_hi["triples"],
         "triples_per_sec_lo": thr_lo,
         "triples_per_sec_hi": thr_hi,
-        "e2e_sec_lo": r_lo["queries"]["kg_pipeline_e2e"],
-        "e2e_sec_hi": r_hi["queries"]["kg_pipeline_e2e"],
+        "e2e_sec_lo": r_lo["e2e_sec"],
+        "e2e_sec_hi": r_hi["e2e_sec"],
         "scaling_efficiency": round(eff, 3),
-        "total_sec_lo": r_lo["value"],
-        "total_sec_hi": r_hi["value"],
         "reps": reps,
-        "e2e_samples_lo": [r["queries"]["kg_pipeline_e2e"] for r in samples[lo]],
-        "e2e_samples_hi": [r["queries"]["kg_pipeline_e2e"] for r in samples[hi]],
+        "e2e_samples_lo": [r["e2e_sec"] for r in samples[lo]],
+        "e2e_samples_hi": [r["e2e_sec"] for r in samples[hi]],
         "ambient_load_lo": loads[lo],
         "ambient_load_hi": loads[hi],
     }
     print(json.dumps(result))
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md"), "a") as f:
+    with open(os.path.join(HERE, "BENCH.md"), "a") as f:
         f.write(
-            f"\n## Scaling run {stamp} ({sf_dir})\n\n"
-            f"| cores | e2e sec | triples/sec | total sec (all queries) |\n"
-            f"|---|---|---|---|\n"
-            f"| {lo} | {result['e2e_sec_lo']} | {thr_lo} | {result['total_sec_lo']} |\n"
-            f"| {hi} | {result['e2e_sec_hi']} | {thr_hi} | {result['total_sec_hi']} |\n\n"
+            f"\n## Scaling run {stamp} ({n_convs} conversations)\n\n"
+            f"| cores | e2e sec | triples/sec |\n"
+            f"|---|---|---|\n"
+            f"| {lo} | {result['e2e_sec_lo']} | {thr_lo} |\n"
+            f"| {hi} | {result['e2e_sec_hi']} | {thr_hi} |\n\n"
             f"Triples/sec scaling efficiency {lo}→{hi} cores "
             f"(per north rule, ≥0.8 target): **{result['scaling_efficiency']}**"
             f" (wall-clock efficiency {round(wall_eff,3)}; {result['triples']} triples).\n"

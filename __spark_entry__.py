@@ -2,10 +2,11 @@
 
 ``entry(spark)`` runs the flagship KG-extraction pipeline (transcripts →
 packed markers → mentions → fused triples) on a deterministic synthetic
-transcript corpus. ``queries()``/``oracle_sql()`` expose the catalog's 70
+transcript corpus. ``queries()``/``oracle_sql()`` expose the catalog's 131
 rows, each with a DuckDB twin: the KG pipeline's outputs and the queries
-over them (``kg_*``, twinned by the Python oracle rendered as VALUES) and
-the reference-semantics operators over the driver's parquet tables.
+over them (``kg_*``, twinned by the Python oracle rendered as VALUES), the
+reference-semantics operators, and the corpus-curation, near-dup, ANN,
+tokenizer and media operators over the driver's parquet tables.
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ triangle counting, both expressed as joins + map-side-combinable
 aggregations so they scale as a constant number of |E|-shuffles per pass.
 
 Semantics are pinned by tests against pure-python/numpy references
-(tests/test_scoring_and_graph.py) and by the kg_* rows' DuckDB twins in
+(tests/test_analytics.py) and by the kg_* rows' DuckDB twins in
 queries_catalog.py.
 """
 

@@ -154,6 +154,197 @@ def variant_oracle_sqls() -> dict[str, str]:
     return _CACHE["variants"]
 
 
+N_MEDIA = 60
+
+
+def _phash_from_gray(gray, hash_size: int = 8) -> int:
+    """Pure-python block-mean average-hash over a row-major grayscale
+    grid (no numpy, no shared code with multimodal.image_phash)."""
+    h, w = len(gray), len(gray[0])
+    bh, bw = h // hash_size, w // hash_size
+    blocks = []
+    for by in range(hash_size):
+        for bx in range(hash_size):
+            s = 0.0
+            for y in range(by * bh, (by + 1) * bh):
+                for x in range(bx * bw, (bx + 1) * bw):
+                    s += gray[y][x]
+            blocks.append(s / (bh * bw))
+    mean = sum(blocks) / len(blocks)
+    v = 0
+    for b in blocks:
+        v = (v << 1) | (1 if b > mean else 0)
+    if v >= 1 << 63:
+        v -= 1 << 64
+    return v
+
+
+def _bmp_phash_py(payload: bytes, hash_size: int = 8):
+    """Independent stdlib-only BMP decode + average-hash (no numpy, no
+    shared code with multimodal.decode_bmp/image_phash) — the oracle twin
+    of the multimodal_phash kernel. Returns (width, height, signed phash)."""
+    import struct
+
+    assert payload[:2] == b"BM"
+    data_off = struct.unpack_from("<I", payload, 10)[0]
+    _hdr, w, h_raw = struct.unpack_from("<Iii", payload, 14)
+    h = abs(h_raw)
+    row_size = (3 * w + 3) // 4 * 4
+    gray = []
+    for y in range(h):                       # image rows, top-down
+        srow = (h - 1 - y) if h_raw > 0 else y
+        base = data_off + srow * row_size
+        row = []
+        for x in range(w):
+            b = payload[base + 3 * x]
+            g = payload[base + 3 * x + 1]
+            r = payload[base + 3 * x + 2]
+            row.append(0.299 * r + 0.587 * g + 0.114 * b)
+        gray.append(row)
+    return w, h, _phash_from_gray(gray, hash_size)
+
+
+def _pixels_phash_py(i: int, hash_size: int = 8):
+    """Average-hash computed straight from the shared *pixel definition*
+    (multimodal.synthetic_pixels) in pure python — no decoder at all. Used
+    as the oracle for PNG rows: the Spark side must invert
+    encode_png(synthetic_pixels(i)) exactly to hash-match, so the driver
+    gate verifies the zlib-compressed roundtrip end to end."""
+    from .multimodal import IMG_SIZE, synthetic_pixels
+
+    px = synthetic_pixels(i)
+    gray = [
+        [0.299 * int(px[y, x, 0]) + 0.587 * int(px[y, x, 1])
+         + 0.114 * int(px[y, x, 2]) for x in range(IMG_SIZE)]
+        for y in range(IMG_SIZE)
+    ]
+    return IMG_SIZE, IMG_SIZE, _phash_from_gray(gray, hash_size)
+
+
+def _wav_fp_py(payload: bytes, n_bits: int = 64):
+    """Independent WAV decode + energy fingerprint: the stdlib ``wave``
+    module (its own RIFF parser — no shared code with
+    multimodal.decode_wav) and pure-python exact-integer frame energies.
+    Returns (rate, n_samples, signed fingerprint)."""
+    import io
+    import struct
+    import wave
+
+    wf = wave.open(io.BytesIO(payload))
+    assert wf.getnchannels() == 1 and wf.getsampwidth() == 2
+    rate = wf.getframerate()
+    raw = wf.readframes(wf.getnframes())
+    samples = struct.unpack(f"<{len(raw) // 2}h", raw)
+    n = len(samples) // n_bits
+    energies = []
+    for j in range(n_bits):
+        s = 0
+        for x in samples[j * n : (j + 1) * n]:
+            s += x * x
+        energies.append(s)
+    tot = sum(energies)
+    v = 0
+    for ej in energies:
+        v = (v << 1) | (1 if ej * n_bits > tot else 0)
+    if v >= 1 << 63:
+        v -= 1 << 64
+    return rate, len(samples), v
+
+
+def _box_resize_digest_py(rgb, out: int = 8) -> int:
+    """Pure-python exact integer box-mean resize + 60-bit md5 digest of
+    the resized RGB bytes (row-major, RGB order) — no numpy, no shared
+    code with multimodal.resize_media."""
+    import hashlib
+
+    h, w = len(rgb), len(rgb[0])
+    bh, bw = h // out, w // out
+    buf = bytearray()
+    for by in range(out):
+        for bx in range(out):
+            for c in range(3):
+                t = 0
+                for y in range(by * bh, (by + 1) * bh):
+                    for x in range(bx * bw, (bx + 1) * bw):
+                        t += rgb[y][x][c]
+                buf.append(t // (bh * bw))
+    return int(hashlib.md5(bytes(buf)).hexdigest()[:15], 16)
+
+
+def _bmp_rgb_py(payload: bytes):
+    """Independent stdlib-only BMP decode to a row-major RGB grid (no
+    numpy, no shared code with multimodal.decode_bmp)."""
+    import struct
+
+    assert payload[:2] == b"BM"
+    data_off = struct.unpack_from("<I", payload, 10)[0]
+    _hdr, w, h_raw = struct.unpack_from("<Iii", payload, 14)
+    h = abs(h_raw)
+    row_size = (3 * w + 3) // 4 * 4
+    rgb = []
+    for y in range(h):
+        srow = (h - 1 - y) if h_raw > 0 else y
+        base = data_off + srow * row_size
+        rgb.append([
+            (payload[base + 3 * x + 2], payload[base + 3 * x + 1],
+             payload[base + 3 * x])
+            for x in range(w)
+        ])
+    return w, h, rgb
+
+
+def _pixels_rgb_py(i: int):
+    """RGB grid straight from the shared pixel definition (the PNG-row
+    oracle: the Spark side must invert encode_png exactly to match)."""
+    from .multimodal import IMG_SIZE, synthetic_pixels
+
+    px = synthetic_pixels(i)
+    rgb = [[(int(px[y, x, 0]), int(px[y, x, 1]), int(px[y, x, 2]))
+            for x in range(IMG_SIZE)] for y in range(IMG_SIZE)]
+    return IMG_SIZE, IMG_SIZE, rgb
+
+
+def multimodal_oracle_sqls() -> dict[str, str]:
+    """VALUES oracles for the multimodal queries: the pinned synthetic
+    media corpus's image/audio payloads re-decoded and re-hashed by the
+    independent stdlib implementations above."""
+    if "multimodal" not in _CACHE:
+        from .multimodal import (
+            encode_bmp,
+            encode_wav,
+            synthetic_pixels,
+            synthetic_samples,
+        )
+
+        img_rows, wav_rows, rsz_rows = [], [], []
+        for i in range(N_MEDIA):
+            if i % 3 == 0:           # synthetic_media kind cycle: image at 0
+                if i % 6 == 0:       # BMP rows: independent payload decoder
+                    w, h, v = _bmp_phash_py(encode_bmp(synthetic_pixels(i)))
+                    _, _, rgb = _bmp_rgb_py(encode_bmp(synthetic_pixels(i)))
+                else:                # PNG rows: hash from the pixel
+                    w, h, v = _pixels_phash_py(i)  # definition (roundtrip
+                    _, _, rgb = _pixels_rgb_py(i)  # verified end-to-end)
+                img_rows.append((i, w, h, v))
+                rsz_rows.append((i, w, h, 8, _box_resize_digest_py(rgb)))
+            elif i % 3 == 1:         # audio at 1
+                r, ns, v = _wav_fp_py(encode_wav(synthetic_samples(i)))
+                wav_rows.append((i, r, ns, v))
+        _CACHE["multimodal"] = {
+            "multimodal_phash": _values_sql(
+                img_rows, ["media_id", "width", "height", "phash"],
+                ["BIGINT", "INTEGER", "INTEGER", "BIGINT"]),
+            "multimodal_audiofp": _values_sql(
+                wav_rows, ["media_id", "sample_rate", "n_samples", "afp"],
+                ["BIGINT", "INTEGER", "BIGINT", "BIGINT"]),
+            "multimodal_resize": _values_sql(
+                rsz_rows,
+                ["media_id", "width", "height", "out_size", "px_digest"],
+                ["BIGINT", "INTEGER", "INTEGER", "INTEGER", "BIGINT"]),
+        }
+    return _CACHE["multimodal"]
+
+
 def kg_oracle_sqls() -> dict[str, str]:
     out = _oracle_outputs()
     o, g, ts = out["oracle"], out["graph"], out["two_stage"]
@@ -285,11 +476,12 @@ def coref_oracle_sqls() -> dict[str, str]:
 def o8_oracle_sqls() -> dict[str, str]:
     """O8 inverse-label gold augmentation (run_re.py:265-281) as a twin
     that RE-DERIVES the rule relationally in DuckDB over the gold VALUES
-    (an independent SQL derivation, not a Python-precomputed literal):
-    forward pairs keep their label id, reversed pairs get the same id when
-    the label is symmetric (the reference's annotated `# bug` branch) or
-    id + NUM_REL - NUM_SYM when not, and a reversed pair already present
-    as a forward gold pair is dropped (the `if w not in pos2label` guard). Ordered-key duplicates
+    (the dedup_cluster discipline — independent SQL derivation, not a
+    Python-precomputed literal): forward pairs keep their label id,
+    reversed pairs get the same id when the label is symmetric (the
+    reference's annotated `# bug` branch) or id + NUM_REL - NUM_SYM when
+    not, and a reversed pair already present as a forward gold pair is
+    dropped (the `if w not in pos2label` guard). Ordered-key duplicates
     take max(lab_id) on BOTH sides — the synthetic gold has none, so the
     tie rule never fires; it exists to keep the twin deterministic."""
     if "o8" not in _CACHE:

@@ -1,7 +1,7 @@
-"""Driver-facing query catalog: the KG pipeline's outputs and the queries
-over them (``kg_*``), plus the reference-semantics operators (span
-enumeration, packing, BIO spans, gold augmentation, scoring arithmetic)
-over the driver's parquet tables, each with a DuckDB oracle twin.
+"""Driver-facing query catalog: SQL-expressible operators from SURVEY.md §2
+over the driver's parquet tables, each with a DuckDB oracle twin, plus
+rows-only entries for the model-dependent pipeline stages and the
+training-data ops (dedup / similarity / text analysis).
 
 Conventions (driver compare = row count + schema + order-insensitive
 value hash): every computed column is aliased identically on both sides;
@@ -79,7 +79,7 @@ FROM r GROUP BY doc_id, rn // 256
 """
 
 
-# ---------- window ops (P4 prefix sum, O13 top-k) --------------------------
+# ---------- window ops (P4 prefix sum, O13 top-k, sessionize) --------------
 
 def q_p4_prefix_sum(spark, sf_dir):
     """P4: running prefix sum per partition key in stable order
@@ -119,6 +119,210 @@ FROM (SELECT user_id, event_id, value,
              row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS rk
       FROM events)
 WHERE rk <= 3
+"""
+
+
+def q_sessionize(spark, sf_dir):
+    """Gap-based sessionization (30-min inactivity) per user — the
+    conversation-window-assembly pattern (P6) over an event stream."""
+    e = _doc(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    epoch = F.col("ts").cast("timestamp_ltz").cast("long")
+    gap = epoch - F.lag(epoch, 1).over(w)
+    return (
+        e.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
+        .withColumn("sess", F.sum("new_sess").over(w))
+        .groupBy("user_id")
+        .agg(F.countDistinct("sess").cast("long").alias("n_sessions"),
+             F.count("*").cast("long").alias("n_events"))
+    )
+
+
+SQL_SESSIONIZE = """
+WITH g AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN epoch(ts) - lag(epoch(ts)) OVER
+              (PARTITION BY user_id ORDER BY ts, event_id) > 1800
+              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+         THEN 1 ELSE 0 END AS new_sess
+  FROM events),
+s AS (SELECT user_id,
+             sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                 ROWS UNBOUNDED PRECEDING) AS sess
+      FROM g)
+SELECT user_id, count(DISTINCT sess)::BIGINT AS n_sessions,
+       count(*)::BIGINT AS n_events
+FROM s GROUP BY user_id
+"""
+
+
+def _epoch_us(col: str):
+    """tz-safe microsecond epoch: the session pins UTC but the driver's
+    session may not, so queries only ever emit *differences* of this."""
+    return F.unix_micros(F.col(col).cast("timestamp_ltz"))
+
+
+def q_asof_join(spark, sf_dir):
+    """Point-in-time (as-of) join — the operator Spark lacks natively:
+    attribute each purchase to the same user's latest prior-or-equal
+    click. Scale shape: NOT a range join (which plans as a per-key
+    cartesian) — both sides union into one stream, ONE shuffle on
+    user_id, one sort, and `last(..., ignorenulls)` over the running
+    window carries the most recent click forward; at 100 TB this is a
+    single sort-merge pass, the same plan an ASOF JOIN engine builds.
+    The DuckDB twin uses the engine's native ASOF LEFT JOIN, so the gate
+    checks the window re-derivation against an independent native
+    implementation. Equal-ts ties are impossible in this corpus (asserted
+    in tests at every sf); output is tz-invariant (ids + µs gap)."""
+    e = _doc(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "purchase"))
+    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    is_click = F.col("event_type") == "click"
+    us = _epoch_us("ts")
+    return (
+        e.withColumn("click_id",
+                     F.last(F.when(is_click, F.col("event_id")),
+                            ignorenulls=True).over(w))
+        .withColumn("click_us",
+                    F.last(F.when(is_click, us), ignorenulls=True).over(w))
+        .filter(~is_click)
+        .select(F.col("event_id").alias("purchase_id"), "user_id",
+                F.coalesce("click_id", F.lit(-1)).alias("click_id"),
+                F.coalesce(us - F.col("click_us"), F.lit(-1))
+                .alias("gap_us"))
+    )
+
+
+SQL_ASOF_JOIN = """
+WITH c AS (SELECT event_id, user_id, ts FROM events
+           WHERE event_type = 'click'),
+p AS (SELECT event_id, user_id, ts FROM events
+      WHERE event_type = 'purchase')
+SELECT p.event_id AS purchase_id, p.user_id,
+       coalesce(c.event_id, -1) AS click_id,
+       coalesce(date_diff('microsecond', c.ts, p.ts), -1) AS gap_us
+FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
+"""
+
+
+_FUNNEL_STEPS = ("signup", "click", "purchase")
+
+
+def q_funnel(spark, sf_dir):
+    """Ordered conversion funnel (signup → click → purchase) per user:
+    each step must occur STRICTLY after the previous step's chosen event,
+    and each step greedily takes the earliest qualifying event (which is
+    the unique optimal choice for reach-maximization). Spark plan: one
+    shuffle — collect the user's (µs, event_id, type) structs, array_sort,
+    and fold the state machine with `F.aggregate`, entirely JVM-side; at
+    100 TB this is a single grouped pass with no joins. The DuckDB twin
+    derives the same semantics relationally (three dependent min-CTEs),
+    an independent formulation. Outputs are tz-invariant step gaps."""
+    e = _doc(spark, sf_dir, "events").filter(
+        F.col("event_type").isin(*_FUNNEL_STEPS))
+    evs = (
+        e.select("user_id",
+                 F.struct(_epoch_us("ts").alias("us"),
+                          F.col("event_id").alias("eid"),
+                          F.col("event_type").alias("et")).alias("ev"))
+        .groupBy("user_id")
+        .agg(F.array_sort(F.collect_list("ev")).alias("evs"))
+    )
+    zero = F.struct(
+        F.lit(0).alias("step"),
+        F.lit(None).cast("long").alias("t1"),
+        F.lit(None).cast("long").alias("t2"),
+        F.lit(None).cast("long").alias("t3"))
+
+    def _step(acc, ev):
+        return (
+            F.when((acc.step == 0) & (ev.et == _FUNNEL_STEPS[0]),
+                   F.struct(F.lit(1).alias("step"), ev.us.alias("t1"),
+                            acc.t2.alias("t2"), acc.t3.alias("t3")))
+            .when((acc.step == 1) & (ev.et == _FUNNEL_STEPS[1])
+                  & (ev.us > acc.t1),
+                  F.struct(F.lit(2).alias("step"), acc.t1.alias("t1"),
+                           ev.us.alias("t2"), acc.t3.alias("t3")))
+            .when((acc.step == 2) & (ev.et == _FUNNEL_STEPS[2])
+                  & (ev.us > acc.t2),
+                  F.struct(F.lit(3).alias("step"), acc.t1.alias("t1"),
+                           acc.t2.alias("t2"), ev.us.alias("t3")))
+            .otherwise(acc)
+        )
+
+    st = F.aggregate("evs", zero, _step)
+    return evs.select(
+        "user_id", st.step.cast("long").alias("step"),
+        F.coalesce(st.t2 - st.t1, F.lit(-1)).alias("gap12_us"),
+        F.coalesce(st.t3 - st.t2, F.lit(-1)).alias("gap23_us"))
+
+
+SQL_FUNNEL = """
+WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_type FROM events
+           WHERE event_type IN ('signup', 'click', 'purchase')),
+t1 AS (SELECT user_id, min(us) AS t1 FROM e
+       WHERE event_type = 'signup' GROUP BY 1),
+t2 AS (SELECT e.user_id, min(us) AS t2 FROM e JOIN t1 USING (user_id)
+       WHERE event_type = 'click' AND us > t1 GROUP BY 1),
+t3 AS (SELECT e.user_id, min(us) AS t3 FROM e JOIN t2 USING (user_id)
+       WHERE event_type = 'purchase' AND us > t2 GROUP BY 1),
+u AS (SELECT DISTINCT user_id FROM e)
+SELECT u.user_id,
+       (CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
+             WHEN t1 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS step,
+       coalesce(t2 - t1, -1) AS gap12_us, coalesce(t3 - t2, -1) AS gap23_us
+FROM u LEFT JOIN t1 USING (user_id) LEFT JOIN t2 USING (user_id)
+       LEFT JOIN t3 USING (user_id)
+"""
+
+
+_WEEK_US = 7 * 86_400 * 1_000_000
+
+
+def q_retention_cohorts(spark, sf_dir):
+    """Cohort retention — the canonical product-analytics rollup: users
+    cohorted by first-activity week, retention = distinct users active
+    k weeks after their cohort week. Weeks are anchored at the corpus's
+    earliest event and derived purely from µs DIFFERENCES (integer
+    `div`, never float division or calendar truncation), so the output
+    is tz-invariant like every other events query. Spark plan: ONE
+    user-keyed shuffle — the per-user week set and the per-user min
+    week come from the same groupBy partitioning (co-partitioned join),
+    then a distinct + count over (cohort, offset, user), both
+    map-side-combinable. At 100 TB this is the shape you want: no
+    windows, no self-join on the raw event stream, the distinct runs
+    over user-weeks (≤ 5 rows/user here), not events."""
+    us = _epoch_us("ts")
+    e = _doc(spark, sf_dir, "events").select("user_id", us.alias("us"))
+    m0 = e.agg(F.min("us").alias("m0"))
+    wk = e.crossJoin(F.broadcast(m0)).select(
+        "user_id",
+        F.expr(f"(us - m0) div {_WEEK_US}").alias("wk")).distinct()
+    fw = wk.groupBy("user_id").agg(F.min("wk").alias("cohort_week"))
+    return (
+        wk.join(fw, "user_id")
+        .select("user_id", "cohort_week",
+                (F.col("wk") - F.col("cohort_week")).alias("week_offset"))
+        .groupBy("cohort_week", "week_offset")
+        .agg(F.count("*").cast("long").alias("n_users"))
+        .select(F.col("cohort_week").cast("long").alias("cohort_week"),
+                F.col("week_offset").cast("long").alias("week_offset"),
+                "n_users")
+    )
+
+
+SQL_RETENTION = f"""
+WITH us AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+m AS (SELECT min(us) AS m0 FROM us),
+wk AS (SELECT DISTINCT user_id, (us - m0) // {_WEEK_US} AS wk FROM us, m),
+fw AS (SELECT user_id, min(wk) AS cohort_week FROM wk GROUP BY user_id),
+r AS (SELECT w.user_id, f.cohort_week, w.wk - f.cohort_week AS week_offset
+      FROM wk w JOIN fw f USING (user_id))
+SELECT cohort_week::BIGINT AS cohort_week,
+       week_offset::BIGINT AS week_offset,
+       count(*)::BIGINT AS n_users
+FROM r GROUP BY 1, 2
 """
 
 
@@ -348,6 +552,723 @@ FROM events GROUP BY event_type
 """
 
 
+# ---------- text / training-data ops ----------------------------------------
+
+def q_dedup_exact(spark, sf_dir):
+    """Exact deduplication: hash-groupBy on content, keep min id."""
+    d = _doc(spark, sf_dir, "documents")
+    return d.groupBy(F.md5("text").alias("content_hash")).agg(
+        F.min("doc_id").cast("long").alias("keep_id"),
+        F.count("*").cast("long").alias("n_copies"),
+    )
+
+
+SQL_DEDUP_EXACT = """
+SELECT md5(text) AS content_hash, min(doc_id)::BIGINT AS keep_id,
+       count(*)::BIGINT AS n_copies
+FROM documents GROUP BY md5(text)
+"""
+
+
+def q_token_count(spark, sf_dir):
+    """Token counting: whitespace + BPE-ish regex token counts."""
+    d = _doc(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        F.size(F.split("text", " ")).cast("long").alias("n_ws_tokens"),
+        F.regexp_count(F.col("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9 ]")).cast("long").alias("n_bpe_tokens"),
+    )
+
+
+SQL_TOKEN_COUNT = """
+SELECT doc_id, len(string_split(text, ' '))::BIGINT AS n_ws_tokens,
+       len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS n_bpe_tokens
+FROM documents
+"""
+
+
+def q_quality_score(spark, sf_dir):
+    """Quality scoring: length / mean word length / non-alpha ratio."""
+    d = _doc(spark, sf_dir, "documents")
+    alpha = F.length(F.regexp_replace("text", r"[^a-z ]", ""))
+    n_words = F.size(F.split("text", " "))
+    return d.select(
+        "doc_id",
+        F.length("text").cast("long").alias("n_chars_obs"),
+        n_words.cast("long").alias("n_words"),
+        F.round((F.length("text") - n_words + 1) / n_words, 6).alias("mean_word_len"),
+        F.round((F.length("text") - alpha) / F.length("text"), 6).alias("non_alpha_ratio"),
+    )
+
+
+SQL_QUALITY = """
+SELECT doc_id, length(text)::BIGINT AS n_chars_obs,
+       len(string_split(text,' '))::BIGINT AS n_words,
+       round((length(text) - len(string_split(text,' ')) + 1)
+             / len(string_split(text,' ')), 6) AS mean_word_len,
+       round((length(text) - length(regexp_replace(text, '[^a-z ]', '', 'g')))
+             / length(text), 6) AS non_alpha_ratio
+FROM documents
+"""
+
+
+def q_lang_id(spark, sf_dir):
+    """Language-ID heuristic: stopword-hit ratio over whitespace tokens."""
+    d = _doc(spark, sf_dir, "documents")
+    stop = ("the", "and", "of", "a", "to", "in", "is")
+    ws = F.split("text", " ")
+    hits = F.size(F.filter(ws, lambda w: w.isin(*stop)))
+    ratio = hits / F.size(ws)
+    return d.select(
+        "doc_id",
+        hits.cast("long").alias("stop_hits"),
+        F.round(ratio, 6).alias("stop_ratio"),
+        F.when(ratio >= 0.08, "en").otherwise("other").alias("lang_guess"),
+    )
+
+
+SQL_LANG_ID = """
+WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
+h AS (SELECT doc_id, len(ws) AS n,
+             len(list_filter(ws, x -> x IN ('the','and','of','a','to','in','is'))) AS hits
+      FROM w)
+SELECT doc_id, hits::BIGINT AS stop_hits, round(hits / n, 6) AS stop_ratio,
+       CASE WHEN hits / n >= 0.08 THEN 'en' ELSE 'other' END AS lang_guess
+FROM h
+"""
+
+
+def q_fingerprint(spark, sf_dir):
+    """Document fingerprinting: order-aware polynomial word fingerprint."""
+    d = _doc(spark, sf_dir, "documents").select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("i", "w")
+    )
+    term = (F.col("i") + 1) * (F.ascii(F.substring("w", 1, 1)) * 31 + F.length("w"))
+    return d.groupBy("doc_id").agg(F.sum(term).cast("long").alias("fingerprint"))
+
+
+SQL_FINGERPRINT = """
+WITH x AS (SELECT doc_id,
+                  UNNEST(string_split(text,' ')) AS w,
+                  UNNEST(range(1, len(string_split(text,' ')) + 1)) AS i
+           FROM documents)
+SELECT doc_id, sum(i * (ascii(w[1:1]) * 31 + length(w)))::BIGINT AS fingerprint
+FROM x GROUP BY doc_id
+"""
+
+
+def q_jaccard_neardup(spark, sf_dir):
+    """N-gram Jaccard near-duplicate pairs with *content-based* blocking:
+    word-count band (±1 — round-2 VERDICT item #7 replaced the exact
+    word-count equality, which split near-dups differing by a single word)
+    plus minimum-distinct-word equality as the join key. A bounded
+    candidate-set demo — production-recall near-dup is the MinHash path.
+    The filter applies to the same rounded value both engines emit (ADVICE
+    round-1: never filter raw on one side and rounded on the other)."""
+    # repartition BEFORE the word-set computation: the sf table is one
+    # parquet file, so the split/distinct map work would otherwise run in
+    # a single scan task (at production scale many files make this moot)
+    d = (
+        _doc(spark, sf_dir, "documents").select("doc_id", "text")
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .select(
+            "doc_id", F.array_distinct(F.split("text", " ")).alias("ws"),
+            F.size(F.split("text", " ")).alias("n"),
+            F.array_min(F.array_distinct(F.split("text", " "))).alias("mn"),
+        )
+    )
+    a = d.alias("a")
+    # The ±1 band must stay an EQUI-join key: the right side explodes to
+    # its three reachable length keys (n-1, n, n+1) so Catalyst hash-joins
+    # on (length-key, mn). A raw `abs(a.n - b.n) <= 1` predicate degrades
+    # the join key to mn alone — mn concentrates on few values, so blocks
+    # go quadratic (measured 3s → ~150s at sf0.1 before this form).
+    # Each qualifying pair matches exactly one of the three keys. The
+    # exploded side carries ids only; the word-set payload re-joins onto
+    # matched pairs (same discipline as the LSH band joins).
+    b = d.select(
+        F.col("doc_id").alias("b_id"), F.col("mn").alias("b_mn"),
+        F.explode(
+            F.array(F.col("n") - 1, F.col("n"), F.col("n") + 1)
+        ).alias("b_k"),
+    ).alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.n") == F.col("b_k"))
+        & (F.col("a.mn") == F.col("b_mn"))
+        & (F.col("a.doc_id") < F.col("b_id")),
+    ).join(
+        d.select(F.col("doc_id").alias("b_id"), F.col("ws").alias("b_ws")),
+        "b_id",
+    )
+    # |union| by arithmetic (|A|+|B|-|A∩B|): one array op per pair instead
+    # of two; `inter` is a named column behind a projection boundary so the
+    # intersect is computed once (the CSE trap documented at textops.py)
+    return (
+        pairs.select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b_id").alias("doc_b"),
+            F.size(F.array_intersect("a.ws", "b_ws")).alias("inter"),
+            (F.size("a.ws") + F.size("b_ws")).alias("tot"),
+        )
+        .select(
+            "doc_a", "doc_b",
+            F.round(F.col("inter") / (F.col("tot") - F.col("inter")), 6)
+            .alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= 0.5)
+    )
+
+
+SQL_JACCARD = """
+WITH d AS (SELECT doc_id, list_distinct(string_split(text,' ')) AS ws,
+                  len(string_split(text,' ')) AS n,
+                  list_min(list_distinct(string_split(text,' '))) AS mn
+           FROM documents),
+p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             round(len(list_intersect(a.ws, b.ws)) /
+                   len(list_distinct(list_concat(a.ws, b.ws))), 6) AS jaccard
+      FROM d a JOIN d b
+        ON abs(a.n - b.n) <= 1 AND a.mn = b.mn AND a.doc_id < b.doc_id)
+SELECT doc_a, doc_b, jaccard FROM p WHERE jaccard >= 0.5
+"""
+
+
+def q_dedup_cluster(spark, sf_dir):
+    """Near-dup clustering + canonical selection (textops.dedup_cluster):
+    the jaccard pair table becomes an undirected similarity graph, connected
+    components (the same size-gated CC kernel as entity canonicalization)
+    labels each doc with its cluster's min doc id, keep=1 marks the one
+    retained representative. Captures transitivity the pair threshold
+    cannot: A~B, B~C cluster together even when jaccard(A,C) < 0.5. The
+    DuckDB twin re-derives components independently via a recursive-CTE
+    transitive closure (min-over-reachable-set), so the driver gate checks
+    the CC labels themselves, not just the pair set."""
+    from .textops import dedup_cluster
+
+    return dedup_cluster(q_jaccard_neardup(spark, sf_dir))
+
+
+SQL_DEDUP_CLUSTER = f"""
+WITH RECURSIVE jp AS (SELECT * FROM ({SQL_JACCARD}) j),
+e AS (SELECT doc_a AS u, doc_b AS v FROM jp
+      UNION SELECT doc_b, doc_a FROM jp),
+reach(u, v) AS (
+    SELECT u, u FROM (SELECT DISTINCT u FROM e) n
+    UNION
+    SELECT r.u, e.v FROM reach r JOIN e ON r.v = e.u),
+lbl AS (SELECT u AS doc_id, min(v) AS canonical_id FROM reach GROUP BY u),
+sz AS (SELECT canonical_id, count(*) AS cluster_size FROM lbl
+       GROUP BY canonical_id)
+SELECT doc_id::BIGINT AS doc_id, canonical_id::BIGINT AS canonical_id,
+       cluster_size::BIGINT AS cluster_size,
+       (CASE WHEN doc_id = canonical_id THEN 1 ELSE 0 END)::BIGINT AS keep
+FROM lbl JOIN sz USING (canonical_id)
+"""
+
+
+def q_gopher_rules(spark, sf_dir):
+    """Rule-based document filter in the style of the published Gopher
+    quality rules (Rae et al. 2021 §A1.1): word-count bounds, mean-word-
+    length bounds, a minimum stop-word count, and a repetition bound (mass
+    of the single most frequent word). Each rule is emitted as its own 0/1
+    column plus the conjunctive keep flag, so downstream ablation can
+    attribute removals per rule. Everything except the repetition rule is a
+    per-row JVM expression; repetition is one explode + two groupBys on
+    (doc_id, word) — ids+word shuffle only. Ratio comparisons apply to the
+    same rounded-6 value both engines emit (float-twin discipline)."""
+    d = _doc(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    n_words = F.size(ws)
+    mwl = F.round((F.length("text") - n_words + 1) / n_words, 6)
+    stop = ("the", "and", "of", "a", "to", "in", "is")
+    stop_hits = F.size(F.filter(ws, lambda w: w.isin(*stop)))
+    base = d.select(
+        "doc_id",
+        n_words.cast("long").alias("n_words"),
+        mwl.alias("mean_word_len"),
+        stop_hits.cast("long").alias("stop_hits"),
+    )
+    top = (
+        d.select("doc_id", F.explode(ws).alias("w"))
+        .groupBy("doc_id", "w").agg(F.count("*").alias("c"))
+        .groupBy("doc_id").agg(F.max("c").alias("top_c"))
+    )
+    j = base.join(top, "doc_id").withColumn(
+        "top_word_ratio", F.round(F.col("top_c") / F.col("n_words"), 6)
+    )
+    r_len = (F.col("n_words") >= 20) & (F.col("n_words") <= 80)
+    r_mwl = (F.col("mean_word_len") >= 3.0) & (F.col("mean_word_len") <= 6.0)
+    r_stop = F.col("stop_hits") >= 2
+    r_rep = F.col("top_word_ratio") <= 0.2
+    return j.select(
+        "doc_id", "n_words", "mean_word_len", "stop_hits", "top_word_ratio",
+        r_len.cast("long").alias("r_len"),
+        r_mwl.cast("long").alias("r_mwl"),
+        r_stop.cast("long").alias("r_stop"),
+        r_rep.cast("long").alias("r_rep"),
+        (r_len & r_mwl & r_stop & r_rep).cast("long").alias("keep"),
+    )
+
+
+SQL_GOPHER = """
+WITH w AS (SELECT doc_id, string_split(text,' ') AS ws, length(text) AS nc
+           FROM documents),
+b AS (SELECT doc_id, len(ws) AS n_words,
+             round((nc - len(ws) + 1) / len(ws), 6) AS mean_word_len,
+             len(list_filter(ws,
+                 x -> x IN ('the','and','of','a','to','in','is'))) AS stop_hits
+      FROM w),
+t AS (SELECT doc_id, max(c) AS top_c
+      FROM (SELECT doc_id, word, count(*) AS c
+            FROM (SELECT doc_id, UNNEST(ws) AS word FROM w) e
+            GROUP BY doc_id, word) g
+      GROUP BY doc_id),
+j AS (SELECT b.*, round(t.top_c / b.n_words, 6) AS top_word_ratio
+      FROM b JOIN t USING (doc_id))
+SELECT doc_id, n_words::BIGINT AS n_words, mean_word_len,
+       stop_hits::BIGINT AS stop_hits, top_word_ratio,
+       (CASE WHEN n_words BETWEEN 20 AND 80 THEN 1 ELSE 0 END)::BIGINT AS r_len,
+       (CASE WHEN mean_word_len BETWEEN 3.0 AND 6.0 THEN 1 ELSE 0 END)::BIGINT AS r_mwl,
+       (CASE WHEN stop_hits >= 2 THEN 1 ELSE 0 END)::BIGINT AS r_stop,
+       (CASE WHEN top_word_ratio <= 0.2 THEN 1 ELSE 0 END)::BIGINT AS r_rep,
+       (CASE WHEN n_words BETWEEN 20 AND 80 AND mean_word_len BETWEEN 3.0 AND 6.0
+             AND stop_hits >= 2 AND top_word_ratio <= 0.2
+        THEN 1 ELSE 0 END)::BIGINT AS keep
+FROM j
+"""
+
+
+def q_substr_dedup(spark, sf_dir):
+    """Exact-substring span dedup in the style of Lee et al. 2021
+    ("Deduplicating Training Data Makes Language Models Better"): document
+    pairs sharing at least one exact 8-word n-gram, with the shared-span
+    count per pair. Relationally: enumerate position n-grams per document
+    (JVM transform/sequence/slice — no Python), hash each gram to a 64-bit
+    key so the candidate shuffle carries (doc_id, hash) ids only (the
+    gram *strings* never shuffle; xxhash64 collisions at ~n²/2^64 are
+    negligible and would only surface as a driver-gate mismatch), drop
+    grams appearing in >50 documents (hot-shingle guard — the same silent-
+    degradation class the simhash band guard covers, here an explicit
+    documented cap), then a per-gram self-join restricted to distinct doc
+    pairs. The DuckDB twin joins on the literal gram strings, so the gate
+    also validates the hashed-join shortcut."""
+    d = (
+        _doc(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("ws"))
+        .filter(F.size("ws") >= 8)
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+    )
+    grams = d.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, size(ws)-8),"
+                " i -> xxhash64(array_join(slice(ws, i+1, 8), ' ')))"
+            )
+        ).alias("gh"),
+    ).distinct()
+    freq = grams.groupBy("gh").agg(F.count("*").alias("nd")).filter(
+        (F.col("nd") >= 2) & (F.col("nd") <= 50)
+    )
+    cand = grams.join(freq.select("gh"), "gh")
+    a = cand.alias("a")
+    b = cand.select(F.col("gh").alias("b_gh"), F.col("doc_id").alias("b_id"))
+    return (
+        a.join(b, (F.col("a.gh") == F.col("b_gh"))
+               & (F.col("a.doc_id") < F.col("b_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b_id").alias("doc_b"))
+        .agg(F.count("*").cast("long").alias("n_shared_ngrams"))
+    )
+
+
+SQL_SUBSTR_DEDUP = """
+WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents
+           WHERE len(string_split(text,' ')) >= 8),
+g AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+7], ' ') AS gram
+      FROM (SELECT doc_id, ws, UNNEST(range(1, len(ws)-6)) AS i FROM w) x),
+f AS (SELECT gram FROM g GROUP BY gram HAVING count(*) BETWEEN 2 AND 50),
+c AS (SELECT g.doc_id, g.gram FROM g JOIN f USING (gram))
+SELECT a.doc_id::BIGINT AS doc_a, b.doc_id::BIGINT AS doc_b,
+       count(*)::BIGINT AS n_shared_ngrams
+FROM c a JOIN c b ON a.gram = b.gram AND a.doc_id < b.doc_id
+GROUP BY a.doc_id, b.doc_id
+"""
+
+
+def _dup_gram_positions(spark, sf_dir):
+    """(doc_id, pos, gh): every 8-word n-gram start position whose gram
+    occurs in >=2 (and <=50 — the substr_dedup hot-shingle cap) distinct
+    documents. Shared by dup_span_merge; the gram strings never shuffle
+    (xxhash64 ids only)."""
+    d = (
+        _doc(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("ws"))
+        .filter(F.size("ws") >= 8)
+    )
+    gpos = d.select(
+        "doc_id",
+        F.posexplode(
+            F.expr(
+                "transform(sequence(0, size(ws)-8),"
+                " i -> xxhash64(array_join(slice(ws, i+1, 8), ' ')))"
+            )
+        ).alias("pos", "gh"),
+    )
+    freq = (
+        gpos.select("doc_id", "gh").distinct()
+        .groupBy("gh").agg(F.count("*").alias("nd"))
+        .filter((F.col("nd") >= 2) & (F.col("nd") <= 50))
+    )
+    return gpos.join(freq.select("gh"), "gh")
+
+
+def q_dup_span_merge(spark, sf_dir):
+    """The second half of Lee et al. 2021 exact-substring dedup (the half
+    substr_dedup's pair counting leaves open): merge each document's
+    duplicated 8-word windows into MAXIMAL duplicated spans — the spans a
+    dedup pass would actually cut out. Classic gaps-and-islands: windows
+    [pos, pos+7] sorted per doc chain into one island while consecutive
+    starts are <= 8 apart (fixed window length makes start-chaining exact
+    interval merging); island id = running sum of break flags. One gram
+    shuffle + one per-doc window sort — per-doc state only, no global
+    sort, so the shape survives any corpus size."""
+    starts = _dup_gram_positions(spark, sf_dir).select(
+        "doc_id", "pos").distinct()
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    brk = F.when(F.col("pos") - F.lag("pos").over(w) > 8,
+                 F.lit(1)).otherwise(F.lit(0))
+    islands = starts.select(
+        "doc_id", "pos",
+        F.sum(brk).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).alias("island"))
+    return (
+        islands.groupBy("doc_id", "island")
+        .agg(F.min("pos").cast("long").alias("span_start"),
+             (F.max("pos") + 7).cast("long").alias("span_end"),
+             F.count("*").cast("long").alias("n_windows"))
+        .select("doc_id", "span_start", "span_end", "n_windows")
+    )
+
+
+SQL_DUP_SPAN_MERGE = """
+WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents
+           WHERE len(string_split(text,' ')) >= 8),
+g AS (SELECT doc_id, i - 1 AS pos, array_to_string(ws[i:i+7], ' ') AS gram
+      FROM (SELECT doc_id, ws, UNNEST(range(1, len(ws)-6)) AS i FROM w) x),
+f AS (SELECT gram FROM (SELECT DISTINCT doc_id, gram FROM g) dg
+      GROUP BY gram HAVING count(*) BETWEEN 2 AND 50),
+s AS (SELECT DISTINCT doc_id, pos FROM g JOIN f USING (gram)),
+l AS (SELECT doc_id, pos,
+             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
+                                            ORDER BY pos) > 8
+                  THEN 1 ELSE 0 END AS brk FROM s),
+isl AS (SELECT doc_id, pos,
+               sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        FROM l)
+SELECT doc_id, min(pos)::BIGINT AS span_start,
+       (max(pos) + 7)::BIGINT AS span_end,
+       count(*)::BIGINT AS n_windows
+FROM isl GROUP BY doc_id, island
+"""
+
+
+def q_containment_neardup(spark, sf_dir):
+    """Asymmetric n-gram CONTAINMENT C(A->B) = |grams(A) ∩ grams(B)| /
+    |grams(A)| — the quantity benchmark-contamination checks actually
+    want (Jaccard under-reports when one side is much shorter: a test
+    item fully embedded in a long document has high containment but low
+    Jaccard). Emits BOTH ordered directions per sharing pair. Shared-gram
+    counting rides the same capped hashed-gram join as substr_dedup; the
+    per-doc denominator is the UNCAPPED distinct-gram count (cap applies
+    to the pair search only, documented lower-bound semantics on
+    n_shared). Float discipline: containment rounded to 6dp, exact
+    integer numerators/denominators carried alongside."""
+    d = (
+        _doc(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("ws"))
+        .filter(F.size("ws") >= 8)
+    )
+    grams = d.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, size(ws)-8),"
+                " i -> xxhash64(array_join(slice(ws, i+1, 8), ' ')))"
+            )
+        ).alias("gh"),
+    ).distinct()
+    sizes = grams.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
+    freq = grams.groupBy("gh").agg(F.count("*").alias("nd")).filter(
+        (F.col("nd") >= 2) & (F.col("nd") <= 50))
+    cand = grams.join(freq.select("gh"), "gh")
+    b = cand.select(F.col("gh").alias("b_gh"), F.col("doc_id").alias("b_id"))
+    shared = (
+        cand.alias("a")
+        .join(b, (F.col("a.gh") == F.col("b_gh"))
+              & (F.col("a.doc_id") != F.col("b_id")))
+        .groupBy(F.col("a.doc_id").alias("src_doc"),
+                 F.col("b_id").alias("dst_doc"))
+        .agg(F.count("*").alias("n_shared"))
+    )
+    return (
+        shared.join(sizes.withColumnRenamed("doc_id", "src_doc"), "src_doc")
+        .select(
+            "src_doc", "dst_doc",
+            F.col("n_shared").cast("long").alias("n_shared"),
+            F.col("n_grams").cast("long").alias("n_src_grams"),
+            F.round(F.col("n_shared") / F.col("n_grams"), 6)
+            .alias("containment"),
+        )
+    )
+
+
+SQL_CONTAINMENT = """
+WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents
+           WHERE len(string_split(text,' ')) >= 8),
+g AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+7], ' ') AS gram
+      FROM (SELECT doc_id, ws, UNNEST(range(1, len(ws)-6)) AS i FROM w) x),
+sizes AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY doc_id),
+f AS (SELECT gram FROM g GROUP BY gram HAVING count(*) BETWEEN 2 AND 50),
+c AS (SELECT g.doc_id, g.gram FROM g JOIN f USING (gram)),
+shared AS (SELECT a.doc_id AS src_doc, b.doc_id AS dst_doc,
+                  count(*) AS n_shared
+           FROM c a JOIN c b ON a.gram = b.gram AND a.doc_id <> b.doc_id
+           GROUP BY a.doc_id, b.doc_id)
+SELECT src_doc::BIGINT AS src_doc, dst_doc::BIGINT AS dst_doc,
+       n_shared::BIGINT AS n_shared, s.n_grams::BIGINT AS n_src_grams,
+       round(n_shared / s.n_grams, 6) AS containment
+FROM shared JOIN sizes s ON s.doc_id = shared.src_doc
+"""
+
+
+def q_ann_cosine_topk(spark, sf_dir):
+    """Brute-force cosine top-k similarity search over the embedding column
+    (baseline ANN; the LSH-bucketed variant is `minhash_neardup`)."""
+    e = _doc(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
+    )
+    dot = F.aggregate(F.zip_with("qv", "v", lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    nq = F.sqrt(F.aggregate(F.transform("qv", lambda x: x * x),
+                            F.lit(0.0), lambda acc, x: acc + x))
+    nv = F.sqrt(F.aggregate(F.transform("v", lambda x: x * x),
+                            F.lit(0.0), lambda acc, x: acc + x))
+    sims = (
+        q.crossJoin(e)
+        .filter(F.col("q_id") != F.col("vec_id"))
+        .select("q_id", "vec_id", (dot / (nq * nv)).alias("sim"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
+    return (
+        sims.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 10)
+        .select("q_id", "vec_id", F.round("sim", 6).alias("sim"),
+                F.col("rk").cast("long").alias("rk"))
+    )
+
+
+KNN_K = 5
+
+
+def q_knn_mutual_graph(spark, sf_dir):
+    """Mutual-kNN graph over the embedding column — the
+    semantic-clustering prepass (each doc's top-K cosine neighbors;
+    keep the pair only when BOTH directions agree): mutual-kNN edges
+    are the standard robust input to clustering / dedup seeding because
+    a hub vector that floods one-directional kNN lists cannot create
+    mutual edges with everything. One row per mutual pair (a < b) with
+    the cosine and both directed ranks.
+
+    Plan: the pairwise score matrix is computed ONCE over (i, j) with
+    i≠j (JVM higher-order dot/norms, no UDF), per-source top-K via a
+    rank window bounded by the per-source candidate count, and the
+    mutual join is two independent projections of the MATERIALIZED kNN
+    list (the Spark 4.1 same-instance self-join trap — see
+    _resolved_triple_sites). Brute N² is the gate shape at 500 vectors;
+    the production candidate generator is the IVF within-cell join the
+    gated semdedup/ann_ivf rows already exercise, with this exact
+    rank+mutual tail re-ranking the bucketed candidates."""
+    e = _doc(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double"))
+        .alias("v"))
+    a = e.select(F.col("vec_id").alias("src"), F.col("v").alias("av"))
+    b = e.select(F.col("vec_id").alias("dst"), F.col("v").alias("bv"))
+    dot = F.aggregate(F.zip_with("av", "bv", lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, x: acc + x)
+    na = F.sqrt(F.aggregate(F.transform("av", lambda x: x * x),
+                            F.lit(0.0), lambda acc, x: acc + x))
+    nb = F.sqrt(F.aggregate(F.transform("bv", lambda x: x * x),
+                            F.lit(0.0), lambda acc, x: acc + x))
+    sims = (a.crossJoin(b).filter(F.col("src") != F.col("dst"))
+            .select("src", "dst", (dot / (na * nb)).alias("sim")))
+    w = Window.partitionBy("src").orderBy(F.desc("sim"), "dst")
+    knn = (sims.withColumn("rk", F.row_number().over(w))
+           .filter(F.col("rk") <= KNN_K).localCheckpoint())
+    x = knn.select(F.col("src").alias("a_id"), F.col("dst").alias("b_id"),
+                   "sim", F.col("rk").alias("rank_ab"))
+    y = knn.select(F.col("dst").alias("a_id"), F.col("src").alias("b_id"),
+                   F.col("rk").alias("rank_ba"))
+    return (x.join(y, ["a_id", "b_id"])
+            .filter(F.col("a_id") < F.col("b_id"))
+            .select("a_id", "b_id", F.round("sim", 6).alias("sim"),
+                    F.col("rank_ab").cast("long").alias("rank_ab"),
+                    F.col("rank_ba").cast("long").alias("rank_ba")))
+
+
+SQL_KNN_MUTUAL = f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
+             list_dot_product(a.v, b.v) /
+             (sqrt(list_dot_product(a.v, a.v)) *
+              sqrt(list_dot_product(b.v, b.v))) AS sim
+      FROM e a, e b WHERE a.vec_id != b.vec_id),
+r AS (SELECT src, dst, sim,
+             row_number() OVER (PARTITION BY src
+                                ORDER BY sim DESC, dst) AS rk
+      FROM s),
+k AS (SELECT * FROM r WHERE rk <= {KNN_K})
+SELECT x.src AS a_id, x.dst AS b_id, round(x.sim, 6) AS sim,
+       x.rk::BIGINT AS rank_ab, y.rk::BIGINT AS rank_ba
+FROM k x JOIN k y ON x.src = y.dst AND x.dst = y.src
+WHERE x.src < x.dst
+"""
+
+
+SQL_ANN = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
+s AS (SELECT q_id, vec_id,
+             list_dot_product(qv, v) /
+             (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS sim
+      FROM q, e WHERE q_id != vec_id),
+r AS (SELECT q_id, vec_id, sim,
+             row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
+      FROM s)
+SELECT q_id, vec_id, round(sim, 6) AS sim, rk::BIGINT AS rk
+FROM r WHERE rk <= 10
+"""
+
+
+def _q_ann_ivf(spark, sf_dir):
+    """IVF ANN scale path (seed-init + one distributed Lloyd step,
+    nprobe=2) — see ann_ivf.py for the plan shape and recall numbers."""
+    from .ann_ivf import q_ann_ivf_topk
+
+    return q_ann_ivf_topk(spark, sf_dir)
+
+
+def _sql_ann_ivf() -> str:
+    from .ann_ivf import SQL_ANN_IVF
+
+    return SQL_ANN_IVF
+
+
+def _q_semdedup(spark, sf_dir):
+    """SemDeDup: cluster-scoped semantic dedup on the shared IVF
+    quantizer — see ann_ivf.semdedup for the plan shape."""
+    from .ann_ivf import q_semdedup
+
+    return q_semdedup(spark, sf_dir)
+
+
+def _sql_semdedup() -> str:
+    from .ann_ivf import SQL_SEMDEDUP
+
+    return SQL_SEMDEDUP
+
+
+def _q_sq_encode(spark, sf_dir):
+    """int8 scalar-quantization encode law (exact-integer gate) — see
+    ann_ivf.q_sq_encode for the code math and parity argument."""
+    from .ann_ivf import q_sq_encode
+
+    return q_sq_encode(spark, sf_dir)
+
+
+def _q_sq_ann_topk(spark, sf_dir):
+    """Asymmetric-distance top-k over int8 SQ codes (Jegou et al. 2011
+    ADC) — the 4x-smaller storage side of ANN; see ann_ivf.q_sq_ann_topk."""
+    from .ann_ivf import q_sq_ann_topk
+
+    return q_sq_ann_topk(spark, sf_dir)
+
+
+def _q_ivf_sq_topk(spark, sf_dir):
+    """IVF x SQ composed (the FAISS IVF,SQ8 shape): probe-pruned scan
+    over int8-coded inverted lists — see ann_ivf.ivf_sq_topk."""
+    from .ann_ivf import q_ivf_sq_topk
+
+    return q_ivf_sq_topk(spark, sf_dir)
+
+
+def _sql_ivf_sq() -> str:
+    from .ann_ivf import SQL_IVF_SQ
+
+    return SQL_IVF_SQ
+
+
+def _q_pq_encode(spark, sf_dir):
+    """Product-quantization encode law (M=4 subspaces x K=16 centroids,
+    16-bit codes): exact-integer code assignments + rounded per-subspace
+    distortion — see pq.q_pq_encode for the codebook-train parity
+    argument."""
+    from .pq import q_pq_encode
+
+    return q_pq_encode(spark, sf_dir)
+
+
+def _q_pq_ann_topk(spark, sf_dir):
+    """PQ ADC top-k: broadcast (subspace, code) lookup table + groupBy
+    sum — the corpus scan touches only integer codes; see
+    pq.pq_ann_topk."""
+    from .pq import q_pq_ann_topk
+
+    return q_pq_ann_topk(spark, sf_dir)
+
+
+def _sql_pq_encode() -> str:
+    from .pq import SQL_PQ_ENCODE
+
+    return SQL_PQ_ENCODE
+
+
+def _sql_pq_ann() -> str:
+    from .pq import SQL_PQ_ANN
+
+    return SQL_PQ_ANN
+
+
+def _q_ivf_pq_topk(spark, sf_dir):
+    """IVF x PQ composed (the FAISS IVF,PQ shape, by_residual=False):
+    probe-pruned scan over integer PQ codes via the broadcast LUT —
+    see pq.ivf_pq_topk."""
+    from .pq import q_ivf_pq_topk
+
+    return q_ivf_pq_topk(spark, sf_dir)
+
+
+def _sql_ivf_pq_s() -> str:
+    from .pq import _sql_ivf_pq
+
+    return _sql_ivf_pq()
+
+
+def _sql_sq_encode() -> str:
+    from .ann_ivf import SQL_SQ_ENCODE
+
+    return SQL_SQ_ENCODE
+
+
+def _sql_sq_ann() -> str:
+    from .ann_ivf import SQL_SQ_ANN
+
+    return SQL_SQ_ANN
+
+
 # ---------- model-dependent entries (oracle = materialized python oracle) --
 # The packed-marker pipeline is the engine under test — its DuckDB twin is
 # the single-process oracle (oracle_ref + oracle_graph) rendered as a VALUES
@@ -496,8 +1417,8 @@ def q_kg_export_ntriples(spark, sf_dir):
 
 def ntriples_from(n: DataFrame, e: DataFrame) -> DataFrame:
     """N-Triples statement table from any (nodes, edges) pair — the
-    grammar core shared by the gated catalog query and the round-trip
-    test."""
+    grammar core shared by the gated catalog query and the at-scale
+    bench leg over the flagship pipeline's outputs."""
     subj = F.concat(F.lit("<urn:kg:e:"),
                     F.col("entity_id").cast("string"), F.lit(">"))
     lab = n.select(
@@ -814,7 +1735,7 @@ def q_kg_redundant_edges(spark, sf_dir):
 
     100-TB shape (graphops.redundant_edges): distinct edge list
     materialized once (it enters the plan three times — the
-    graph_triangles lesson), one wedge equi-join keyed on the mid,
+    triangle_counts lesson), one wedge equi-join keyed on the mid,
     redundancy as an ids-only inner join back to the edge list. Hub-mid
     skew capped/salted per the triangle_counts discipline at real
     scale."""
@@ -1092,7 +2013,8 @@ def _turn_meta(out: dict) -> DataFrame:
     consumer emits only DIFFERENCES of this column (offsets from the
     corpus-wide minimum, day buckets of those offsets) — the shift
     cancels, the values are tz-invariant, and the DuckDB twin can derive
-    the same numbers from raw epoch seconds."""
+    the same numbers from raw epoch seconds (the _epoch_us contract used
+    by the events queries)."""
     return out["turns_tok"].select(
         "conv_id", "turn_idx", "role", "tool",
         F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
@@ -1326,7 +2248,7 @@ def q_kg_path_2hop(spark, sf_dir):
     the degree-orientation discipline); here |E| ≈ 200 so AQE handles it.
     The edge input is localCheckpoint-ed by _pipeline_outputs, so the
     three scans of it are scans of materialized data, not three
-    re-derivations of the extraction lineage (the graph_triangles lesson,
+    re-derivations of the extraction lineage (the triangle_counts lesson,
     graphops.py)."""
     out = _pipeline_outputs(spark, sf_dir)
     e = out["edges"].select(
@@ -1808,7 +2730,8 @@ def q_kg_cc_components(spark, sf_dir):
     island, which are singletons. Labels come from the SAME size-gated
     CC kernel the entity linker uses (pipeline/cc.py — driver
     union-find under the bounded probe, alternating-star min-label at
-    true graph scale, both min-id-identical); isolated nodes keep
+    true graph scale, both min-id-identical and the star branch
+    bench-asserted at 400k edges in cc_star_400k); isolated nodes keep
     their own id as the label. Output is one row per entity with its
     component id and component size — the partition key a downstream
     per-island job (subgraph export, per-community summarization) would
@@ -1884,7 +2807,8 @@ def q_kg_khop_subgraph(spark, sf_dir):
     to render "the graph around X", endpoints annotated with min-hop
     distances from the seed. Engine: graphops.khop_subgraph (per-level
     deduped + re-checkpointed seeded BFS, induced edges via two ids-only
-    equi-joins). The DuckDB
+    equi-joins; the BFS shape is bench-asserted at 400k edges in
+    reach_400k, the degree-census seed top-k in ppr_400k). The DuckDB
     twin re-derives reach independently via a bounded recursive CTE."""
     from .graphops import khop_subgraph
 
@@ -2110,6 +3034,26 @@ def q_kg_ner_examples(spark, sf_dir):
                 F.array_sort(F.collect_list(F.struct("idx", "tk"))),
                 lambda s: s["tk"]),
             " ").alias("tagged"))
+
+
+def q_tool_transitions(spark, sf_dir):
+    """Agent-transcript tool-sequence mining: the first-order Markov
+    transition table over consecutive TOOL turns within a conversation —
+    which tool follows which, how often, across how many conversations.
+    The `tool` column of the north-rule transcript schema as behavioral
+    analytics (drives tool-chain templates and anomaly detection over
+    agent logs). One (conv)-keyed lead window over the role='tool'
+    projection, then a map-side-combinable pair agg — no self-join."""
+    out = _pipeline_outputs(spark, sf_dir)
+    tm = out["turns_tok"].select("conv_id", "turn_idx", "role", "tool")
+    tools = tm.filter(F.col("role") == "tool")
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    seq = tools.select(
+        "conv_id", "tool", F.lead("tool").over(w).alias("next_tool"))
+    return (seq.filter(F.col("next_tool").isNotNull())
+            .groupBy("tool", "next_tool")
+            .agg(F.count("*").cast("long").alias("n"),
+                 F.countDistinct("conv_id").cast("long").alias("n_convs")))
 
 
 def _sql_kg_turns() -> str:
@@ -3117,6 +4061,22 @@ FROM tagged GROUP BY conv_id, turn_idx
 """
 
 
+def _sql_tool_transitions() -> str:
+    return f"""
+WITH tu AS ({_sql_kg_turns()}),
+tools AS (SELECT conv_id, turn_idx, tool FROM tu WHERE role = 'tool'),
+seq AS (SELECT conv_id, tool,
+               lead(tool) OVER (PARTITION BY conv_id ORDER BY turn_idx)
+                 AS next_tool
+        FROM tools)
+SELECT tool, next_tool,
+       count(*)::BIGINT AS n,
+       count(DISTINCT conv_id)::BIGINT AS n_convs
+FROM seq WHERE next_tool IS NOT NULL
+GROUP BY tool, next_tool
+"""
+
+
 def _sql_kg_negative_samples() -> str:
     from .oracle_values import kg_oracle_sqls
 
@@ -3505,6 +4465,209 @@ def q_o17_coref_metrics(spark, sf_dir):
     return coref_metrics(gold, coref_clusters(out["mention_entity"]))
 
 
+def q_multimodal_phash(spark, sf_dir):
+    """Real multimodal decode→feature kernel: pure-numpy BMP decode +
+    64-bit average-hash over the pinned synthetic media corpus (round-2
+    VERDICT item #8 — first multimodal green row). Oracle = independent
+    stdlib reimplementation rendered as VALUES (oracle_values)."""
+    from .multimodal import phash_media, synthetic_media
+    from .oracle_values import N_MEDIA
+
+    return phash_media(synthetic_media(spark, N_MEDIA))
+
+
+def q_multimodal_audiofp(spark, sf_dir):
+    """Real audio decode→feature kernel: RIFF/PCM WAV decode + 64-bit
+    exact-integer frame-energy fingerprint over the pinned synthetic
+    media corpus (second unstubbed modality). Oracle = stdlib ``wave``
+    module decode + pure-python integer energies rendered as VALUES
+    (oracle_values._wav_fp_py — an independent RIFF parser)."""
+    from .multimodal import fingerprint_audio, synthetic_media
+    from .oracle_values import N_MEDIA
+
+    return fingerprint_audio(synthetic_media(spark, N_MEDIA))
+
+
+def q_multimodal_resize(spark, sf_dir):
+    """Real image resize kernel: native BMP/PNG decode + exact integer
+    box-mean downsample to 8×8 RGB, digested via 60-bit md5 of the
+    resized bytes. Oracle = independent pure-python decoders + resize
+    (oracle_values._bmp_rgb_py / _pixels_rgb_py / _box_resize_digest_py)
+    rendered as VALUES — the resize arithmetic is verified bit-for-bit,
+    not just the plumbing."""
+    from .multimodal import resize_media, synthetic_media
+    from .oracle_values import N_MEDIA
+
+    return resize_media(synthetic_media(spark, N_MEDIA))
+
+
+def q_minhash_neardup(spark, sf_dir):
+    """MinHash+LSH near-dup candidates over documents (shingle → one
+    portable hash → affine permutation minima → band → salted bucket join →
+    exact-Jaccard verify). The DuckDB twin replicates the full LSH pipeline
+    — bucketing included — so candidate generation itself is oracle-checked."""
+    from .textops import minhash_candidates
+
+    return minhash_candidates(_doc(spark, sf_dir, "documents"))
+
+
+def _sql_minhash() -> str:
+    from .phash import phash64_sql
+    from .textops import MINHASH_A, MINHASH_B, MINHASH_BANDS, MINHASH_P, MINHASH_PERMS
+
+    rpb = MINHASH_PERMS // MINHASH_BANDS
+    sig_cols = ",\n       ".join(
+        f"list_min(list_transform(hs, x -> ({MINHASH_A[i]} * x + {MINHASH_B[i]}) % {MINHASH_P})) AS mh{i}"
+        for i in range(MINHASH_PERMS)
+    )
+    bands = "\n  UNION ALL ".join(
+        "SELECT id, {b} AS band, {k} AS bkey FROM sig".format(
+            b=b,
+            k=phash64_sql(
+                " || ':' || ".join(f"mh{b * rpb + r}::VARCHAR" for r in range(rpb)),
+                f"band{b}",
+            ),
+        )
+        for b in range(MINHASH_BANDS)
+    )
+    return f"""
+WITH d AS (SELECT doc_id AS id, string_split(text, ' ') AS ws FROM documents),
+sh AS (SELECT id, list_distinct(list_transform(range(1, greatest(len(ws) - 2, 1) + 1),
+              i -> array_to_string(ws[i:i+2], ' '))) AS sh FROM d),
+h AS (SELECT id, list_transform(sh, s -> {phash64_sql('s', 'sh', 8)}) AS hs FROM sh),
+sig AS (SELECT id,
+       {sig_cols}
+FROM h),
+bands AS ({bands}),
+pairs AS (SELECT DISTINCT a.id AS doc_a, b.id AS doc_b
+          FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id),
+j AS (SELECT doc_a, doc_b,
+             round(len(list_intersect(sa.sh, sb.sh)) /
+                   len(list_distinct(list_concat(sa.sh, sb.sh))), 6) AS jaccard
+      FROM pairs JOIN sh sa ON sa.id = doc_a JOIN sh sb ON sb.id = doc_b)
+SELECT doc_a, doc_b, jaccard FROM j WHERE jaccard >= 0.5
+"""
+
+
+def _sql_simhash_fp() -> str:
+    """Shared CTE body computing (doc_id, simhash, n_tokens)."""
+    from .phash import phash64_sql
+    from .textops import SIMHASH_BITS
+
+    terms = " +\n       ".join(
+        f"CASE WHEN list_sum(list_transform(hs, h -> CASE WHEN (h >> {j}) & 1 = 1 "
+        f"THEN 1 ELSE -1 END)) > 0 THEN {1 << j} ELSE 0 END"
+        for j in range(SIMHASH_BITS)
+    )
+    return f"""
+WITH t AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+h AS (SELECT doc_id, len(ws) AS n_tokens,
+             list_transform(ws, x -> {phash64_sql('x', 'sim', 8)}) AS hs FROM t),
+fp AS (SELECT doc_id,
+       ({terms})::BIGINT AS simhash,
+       n_tokens::BIGINT AS n_tokens FROM h)
+"""
+
+
+def q_simhash_buckets(spark, sf_dir):
+    from .textops import simhash_docs
+
+    return simhash_docs(_doc(spark, sf_dir, "documents"))
+
+
+def _sql_simhash_buckets() -> str:
+    return _sql_simhash_fp() + "SELECT doc_id, simhash, n_tokens FROM fp"
+
+
+def q_simhash_hamming(spark, sf_dir):
+    """SimHash Hamming-≤3 near-dup pairs via banded fingerprint search.
+
+    The banding is provably exact for k ≤ SIMHASH_BANDS-1 (pigeonhole), so
+    the DuckDB twin may brute-force bit_count(xor) — the oracle gate thereby
+    verifies the banding's exact-recall claim, not just the arithmetic."""
+    from .textops import simhash_neardup_hamming
+
+    return simhash_neardup_hamming(_doc(spark, sf_dir, "documents"), k=3)
+
+
+def _sql_simhash_hamming(k: int = 3) -> str:
+    return _sql_simhash_fp() + f"""
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
+FROM fp a JOIN fp b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {k}
+"""
+
+
+def q_simhash_hamming_k5(spark, sf_dir):
+    """SimHash Hamming-≤5 pairs: k above the 4-band pigeonhole bound routes
+    to the 8×4-bit band composition (`textops._simhash_n_bands`); the
+    brute-force DuckDB twin verifies the wider banding's exact recall."""
+    from .textops import simhash_neardup_hamming
+
+    return simhash_neardup_hamming(_doc(spark, sf_dir, "documents"), k=5)
+
+
+def _planted_embeddings(spark, sf_dir):
+    """embeddings ∪ 10 planted near-duplicates (vec_id + 1000000, first
+    component +0.01) as double vectors — identical construction in the
+    DuckDB twin, so the τ=0.95 path is exercised on true near-dups instead
+    of bending the threshold to random data (round-1 VERDICT item #4)."""
+    e = _doc(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    planted = e.filter(F.col("vec_id") < 10).select(
+        (F.col("vec_id") + 1000000).alias("vec_id"),
+        F.concat(
+            F.array(F.element_at("v", 1) + F.lit(0.01)),
+            F.slice("v", 2, 63),
+        ).alias("v"),
+    )
+    return e.unionByName(planted)
+
+
+def q_embedding_neardup(spark, sf_dir):
+    """Embedding-cosine near-dup at τ=0.95 via banded hyperplane LSH
+    (EMB_BANDS × 16-bit sign tables; candidates = union over bands; exact
+    cosine verify). DuckDB twin replicates bucketing and verify."""
+    from .textops import embedding_neardup
+
+    return embedding_neardup(
+        _planted_embeddings(spark, sf_dir), threshold=0.95, dim=64,
+        id_col="vec_id", vec_col="v",
+    )
+
+
+def _sql_embedding_neardup() -> str:
+    from .textops import EMB_BANDS, EMB_BITS, _emb_weights
+
+    W = _emb_weights(64)
+    bands = []
+    for b in range(EMB_BANDS):
+        bits = " + ".join(
+            "CASE WHEN list_dot_product(v, ["
+            + ", ".join(repr(x) for x in W[b][j])
+            + f"]) > 0 THEN {1 << j} ELSE 0 END"
+            for j in range(EMB_BITS)
+        )
+        bands.append(f"SELECT id, {b} AS band, ({bits})::BIGINT AS bkey FROM base")
+    bands_sql = "\n  UNION ALL ".join(bands)
+    return f"""
+WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
+planted AS (SELECT id + 1000000 AS id,
+                   list_concat([v[1] + 0.01], v[2:64]) AS v FROM e WHERE id < 10),
+base AS (SELECT * FROM e UNION ALL SELECT * FROM planted),
+bands AS ({bands_sql}),
+pairs AS (SELECT DISTINCT a.id AS vec_a, b.id AS vec_b
+          FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.id < b.id),
+c AS (SELECT vec_a, vec_b,
+             round(list_dot_product(va.v, vb.v) /
+                   (sqrt(list_dot_product(va.v, va.v)) * sqrt(list_dot_product(vb.v, vb.v))), 6) AS cosine
+      FROM pairs JOIN base va ON va.id = vec_a JOIN base vb ON vb.id = vec_b)
+SELECT vec_a, vec_b, cosine FROM c WHERE cosine >= 0.95
+"""
+
+
 def q_kg_two_stage_mentions(spark, sf_dir):
     """Two-stage NER (BIO candidates → packed scoring); oracle =
     oracle_ref.oracle_two_stage materialized (plus exactness tests in
@@ -3597,9 +4760,11 @@ def inverse_gold_augment(g: DataFrame, ord_col: str | None = None) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from .queries_dataops import DATAOPS_QUERIES
+
     # Order matters: a caller of __spark_entry__.queries() may verify only
     # the first 50 entries, so the pipeline's own outputs come first.
-    return {
+    head = {
         "kg_triples": q_kg_triples,
         "kg_mentions": q_kg_mentions,
         "kg_mentions_hf": q_kg_mentions_hf,
@@ -3624,8 +4789,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_snapshot_delta": q_kg_snapshot_delta,
         "kg_re_examples": q_kg_re_examples,
         "kg_ner_examples": q_kg_ner_examples,
+        "tool_transitions": q_tool_transitions,
+        "semdedup": _q_semdedup,
+        "multimodal_resize": q_multimodal_resize,
         "o17_coref_conll": q_o17_coref_conll,
         "o17_coref_metrics": q_o17_coref_metrics,
+        "minhash_neardup": q_minhash_neardup,
+        "simhash_buckets": q_simhash_buckets,
+        "simhash_hamming": q_simhash_hamming,
+        "embedding_neardup": q_embedding_neardup,
+        "ann_ivf_topk": _q_ann_ivf,
+        "ann_cosine_topk": q_ann_cosine_topk,
         "kg_reachability": q_kg_reachability,
         "kg_best_chain": q_kg_best_chain,
         "kg_embed_eval": q_kg_embed_eval,
@@ -3641,6 +4815,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_bgp_match": q_kg_bgp_match,
         "kg_type_violations": q_kg_type_violations,
         "kg_ntriples_roundtrip": q_kg_ntriples_roundtrip,
+    }
+    assert len(head) == 50, f"driver window misaligned: {len(head)}"
+    return {
+        **head,
         "kg_khop_subgraph": q_kg_khop_subgraph,
         "kg_min_cost_path": q_kg_min_cost_path,
         "kg_hits": q_kg_hits,
@@ -3656,25 +4834,64 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_conf_calibration": q_kg_conf_calibration,
         "kg_cc_incremental": q_kg_cc_incremental,
         "kg_gold_relations": q_kg_gold_relations,
+        "knn_mutual_graph": q_knn_mutual_graph,
+        "bpe_encode": DATAOPS_QUERIES["bpe_encode"],
+        "bigram_lm_ce": DATAOPS_QUERIES["bigram_lm_ce"],
+        "jsd_drift": DATAOPS_QUERIES["jsd_drift"],
+        "zipf_slope": DATAOPS_QUERIES["zipf_slope"],
+        "retention_cohorts": q_retention_cohorts,
+        "kneser_ney_bigram": DATAOPS_QUERIES["kneser_ney_bigram"],
+        "wordpiece_train": DATAOPS_QUERIES["wordpiece_train"],
+        "pmi_pairs": DATAOPS_QUERIES["pmi_pairs"],
+        "bpe_train": DATAOPS_QUERIES["bpe_train"],
+        "unigram_train": DATAOPS_QUERIES["unigram_train"],
+        "sq_ann_topk": _q_sq_ann_topk,
+        "dup_span_merge": q_dup_span_merge,
+        "pq_ann_topk": _q_pq_ann_topk,
+        "containment_neardup": q_containment_neardup,
         "kg_triples_levpair": q_kg_triples_levpair,
         "kg_mentions_roberta": q_kg_mentions_roberta,
         "kg_triples_unidirect": q_kg_triples_unidirect,
+        "sessionize": q_sessionize,
+        "asof_join": q_asof_join,
+        "funnel": q_funnel,
+        "token_count": q_token_count,
+        "quality_score": q_quality_score,
+        "lang_id": q_lang_id,
         "o12_chunk_f1": q_o12_chunk_f1,
         "o14_sorted_words": q_o14_sorted_words,
         "o11_micro_prf": q_o11_micro_prf,
         "o15_seed_stats": q_o15_seed_stats,
+        "fingerprint": q_fingerprint,
+        "gopher_rules": q_gopher_rules,
+        "substr_dedup": q_substr_dedup,
         "o8_inverse_gold": q_o8_inverse_gold,
         "o13_topk": q_o13_topk,
+        "weighted_sample": DATAOPS_QUERIES["weighted_sample"],
+        "ivf_sq_topk": _q_ivf_sq_topk,
+        "sq_encode": _q_sq_encode,
+        "pq_encode": _q_pq_encode,
+        "ivf_pq_topk": _q_ivf_pq_topk,
+        "multimodal_phash": q_multimodal_phash,
+        "multimodal_audiofp": q_multimodal_audiofp,
+        "simhash_hamming_k5": q_simhash_hamming_k5,
         "c1_span_enum": q_c1_span_enum,
         "k1_pack_groups": q_k1_pack_groups,
         "p4_prefix_sum": q_p4_prefix_sum,
         "p8_bio_spans": q_p8_bio_spans,
+        "dedup_exact": q_dedup_exact,
+        "jaccard_neardup": q_jaccard_neardup,
+        "dedup_cluster": q_dedup_cluster,
+        **DATAOPS_QUERIES,
         "kg_entity_pagerank": q_kg_entity_pagerank,
     }
 
 
 def oracle_sql() -> dict[str, str]:
+    from .queries_dataops import DATAOPS_SQLS
+
     return {
+        **DATAOPS_SQLS,
         "c1_span_enum": SQL_C1,
         "k1_pack_groups": SQL_K1,
         "p4_prefix_sum": SQL_P4,
@@ -3682,8 +4899,38 @@ def oracle_sql() -> dict[str, str]:
         "p8_bio_spans": SQL_P8,
         "o12_chunk_f1": SQL_O12,
         "o14_sorted_words": SQL_O14,
+        "sessionize": SQL_SESSIONIZE,
+        "asof_join": SQL_ASOF_JOIN,
+        "funnel": SQL_FUNNEL,
         "o11_micro_prf": SQL_O11,
         "o15_seed_stats": SQL_O15,
+        "dedup_exact": SQL_DEDUP_EXACT,
+        "token_count": SQL_TOKEN_COUNT,
+        "quality_score": SQL_QUALITY,
+        "lang_id": SQL_LANG_ID,
+        "fingerprint": SQL_FINGERPRINT,
+        "jaccard_neardup": SQL_JACCARD,
+        "dedup_cluster": SQL_DEDUP_CLUSTER,
+        "gopher_rules": SQL_GOPHER,
+        "substr_dedup": SQL_SUBSTR_DEDUP,
+        "dup_span_merge": SQL_DUP_SPAN_MERGE,
+        "containment_neardup": SQL_CONTAINMENT,
+        "ann_cosine_topk": SQL_ANN,
+        "knn_mutual_graph": SQL_KNN_MUTUAL,
+        "ann_ivf_topk": _sql_ann_ivf(),
+        "semdedup": _sql_semdedup(),
+        "minhash_neardup": _sql_minhash(),
+        "simhash_buckets": _sql_simhash_buckets(),
+        "simhash_hamming": _sql_simhash_hamming(),
+        "simhash_hamming_k5": _sql_simhash_hamming(5),
+        "embedding_neardup": _sql_embedding_neardup(),
+        "sq_encode": _sql_sq_encode(),
+        "sq_ann_topk": _sql_sq_ann(),
+        "ivf_sq_topk": _sql_ivf_sq(),
+        "pq_encode": _sql_pq_encode(),
+        "pq_ann_topk": _sql_pq_ann(),
+        "ivf_pq_topk": _sql_ivf_pq_s(),
+        "retention_cohorts": SQL_RETENTION,
         "kg_canonical_alias": _sql_kg_canonical_alias(),
         "kg_export_ntriples": _sql_kg_export_ntriples(),
         "kg_ntriples_roundtrip": _sql_kg_ntriples_roundtrip(),
@@ -3731,6 +4978,7 @@ def oracle_sql() -> dict[str, str]:
         "kg_agg_negation": _sql_kg_agg_negation(),
         "kg_re_examples": _sql_kg_re_examples(),
         "kg_ner_examples": _sql_kg_ner_examples(),
+        "tool_transitions": _sql_tool_transitions(),
         **_kg_sqls(),
     }
 
@@ -3739,9 +4987,11 @@ def _kg_sqls() -> dict[str, str]:
     from .oracle_values import (
         coref_oracle_sqls,
         kg_oracle_sqls,
+        multimodal_oracle_sqls,
         o8_oracle_sqls,
         variant_oracle_sqls,
     )
 
     return {**kg_oracle_sqls(), **variant_oracle_sqls(),
-            **coref_oracle_sqls(), **o8_oracle_sqls()}
+            **multimodal_oracle_sqls(), **coref_oracle_sqls(),
+            **o8_oracle_sqls()}

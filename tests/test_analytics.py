@@ -1,20 +1,14 @@
-"""Semantic tests for the analytics extension set (queries_analytics.py):
-the cross-engine gate proves Spark==DuckDB determinism; these pin the
-*math* — PageRank against a numpy reference, triangles against brute
-force, sketch guarantees (CMS overestimation, HLL error bound), the
-binned range join against the naive inequality join, and ROLLUP
-additivity."""
+"""Semantic tests for the graph kernels in graphops.py: the kg_* rows'
+cross-engine gate proves Spark==DuckDB determinism; these pin the *math*
+— PageRank against a numpy reference, triangles, label propagation and
+Adamic-Adar against brute force."""
 
 import itertools
-import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pl_marker_spark.graphops import pagerank, symmetrize, triangle_counts
-
-SF = "/root/testdata/sf0.001"
 
 
 def _np_pagerank(n_nodes, und_edges, iters=5, damp=0.85):
@@ -71,188 +65,31 @@ def test_triangles_brute_force(spark):
     assert got == want
 
 
-def test_cms_overestimates(spark):
-    from pl_marker_spark.queries_analytics import q_cms_freq
-
-    rows = q_cms_freq(spark, SF).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r.est >= r.exact
-    absent = [r for r in rows if r.token == "zzz_absent"]
-    assert absent and absent[0].exact == 0
-
-
-def test_hll_error_bound(spark):
-    from pl_marker_spark.queries_analytics import q_hll_estimate
-
-    row = q_hll_estimate(spark, SF).collect()[0]
-    # sigma = 1.04/sqrt(256) = 6.5%; 3 sigma bound on the raw estimator
-    assert row.exact_distinct > 1000
-    assert abs(row.rel_err) < 0.2
-    assert row.est_distinct == pytest.approx(
-        row.exact_distinct * (1 + row.rel_err), rel=1e-4)
-
-
-def test_range_join_matches_naive(spark):
-    from pl_marker_spark.queries_analytics import (_RJ_BIN_US,
-                                                   q_range_join_counts)
-
-    e = spark.read.parquet(f"{SF}/events.parquet")
-    us = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
-    c = e.filter(F.col("event_type") == "click").select(us.alias("c_us"))
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"), us.alias("p_us"))
-    naive = (
-        p.crossJoin(c)
-        .filter(F.abs(F.col("c_us") - F.col("p_us")) <= _RJ_BIN_US)
-        .groupBy("purchase_id").agg(F.count("*").alias("n"))
-    )
-    naive_map = {r.purchase_id: r.n for r in naive.collect()}
-    got = {r.purchase_id: r.n_clicks for r in
-           q_range_join_counts(spark, SF).collect()}
-    assert set(got) >= set(naive_map)
-    for k, v in got.items():
-        assert v == naive_map.get(k, 0)
-
-
-def test_rollup_additivity(spark):
-    from pl_marker_spark.queries_analytics import q_rollup_revenue
-
-    rows = q_rollup_revenue(spark, SF).collect()
-    leaves = [r for r in rows if r.g_et == 0 and r.g_kb == 0]
-    subs = [r for r in rows if r.g_et == 0 and r.g_kb == 1]
-    grand = [r for r in rows if r.g_et == 1 and r.g_kb == 1]
-    assert len(grand) == 1
-    assert grand[0].event_type == "ALL" and grand[0].kb == -1
-    assert grand[0].n == sum(r.n for r in leaves)
-    assert grand[0].total == pytest.approx(
-        sum(r.total for r in leaves), abs=1e-3)
-    for s in subs:
-        mine = [r for r in leaves if r.event_type == s.event_type]
-        assert s.n == sum(r.n for r in mine)
-        assert s.total == pytest.approx(sum(r.total for r in mine), abs=1e-3)
-
-
-def test_heavy_hitters_rank_contract(spark):
-    from pl_marker_spark.queries_analytics import q_heavy_hitters
-
-    rows = sorted(q_heavy_hitters(spark, SF).collect(), key=lambda r: r.rk)
-    assert [r.rk for r in rows] == list(range(1, 21))
-    for a, b in zip(rows, rows[1:]):
-        assert a.cnt > b.cnt or (a.cnt == b.cnt and a.token < b.token)
-
-
-def test_percentiles_match_numpy(spark):
-    from pl_marker_spark.queries_analytics import q_percentile_groups
-
-    e = spark.read.parquet(f"{SF}/events.parquet")
-    vals = {}
-    for r in e.select("event_type", "value", "event_id").collect():
-        vals.setdefault(r.event_type, []).append((r.value, r.event_id))
-    got = {(r.event_type, r.p): r.val
-           for r in q_percentile_groups(spark, SF).collect()}
-    for et, pairs in vals.items():
-        s = sorted(pairs)
-        n = len(s)
-        for p in (0.5, 0.9, 0.99):
-            want = round(s[math.ceil(p * n) - 1][0], 6)
-            assert got[(et, p)] == pytest.approx(want, abs=1e-6)
-
-
-def test_kcore_matches_peel_to_convergence(spark):
-    """The fixed-round (R=4) k-core equals brute-force peeling run to the
-    fixed point on the same edge list — i.e. the corpus converges inside
-    the pinned rounds — and the peel actually removes nodes (the 2-core
-    is a strict subgraph here, so the operator is non-degenerate)."""
-    from collections import Counter
-
-    from pl_marker_spark.queries_analytics import (
-        KCORE_K, _neardup_edges, q_graph_kcore)
-
-    edges = [(r.doc_a, r.doc_b) for r in _neardup_edges(spark, SF).collect()]
-    cur = set(edges)
-    while True:
-        deg = Counter()
-        for a, b in cur:
-            deg[a] += 1
-            deg[b] += 1
-        alive = {n for n, d in deg.items() if d >= KCORE_K}
-        nxt = {(a, b) for a, b in cur if a in alive and b in alive}
-        if nxt == cur:
-            break
-        cur = nxt
-    deg = Counter()
-    for a, b in cur:
-        deg[a] += 1
-        deg[b] += 1
-    got = {(r.doc_id, r.core_degree) for r in q_graph_kcore(spark, SF).collect()}
-    assert got == set(deg.items())
-    all_nodes = {n for e in edges for n in e}
-    assert got and len({d for d, _ in got}) < len(all_nodes)
-
-
-def test_bloom_matches_pure_python(spark):
-    """q_bloom_build equals a pure-python Bloom filter built from the same
-    md5 slice positions over the distinct corpus vocabulary — pins the
-    bit layout (word_idx = p DIV 32, bit = p % 32) independently of the
-    SQL twin."""
-    import hashlib
-
-    from pl_marker_spark.queries_analytics import (
-        BLOOM_K, BLOOM_M, BLOOM_WORD, q_bloom_build)
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("text")
-    vocab = {w for (t,) in docs.collect() for w in t.split(" ")}
-    words = [0] * (BLOOM_M // BLOOM_WORD)
-    for tok in vocab:
-        h = hashlib.md5(tok.encode()).hexdigest()
-        for j in range(BLOOM_K):
-            p = int(h[4 * j:4 * j + 4], 16) % BLOOM_M
-            words[p // BLOOM_WORD] |= 1 << (p % BLOOM_WORD)
-    got = {(r.word_idx, r.word) for r in q_bloom_build(spark, SF).collect()}
-    assert got == {(i, w) for i, w in enumerate(words)}
-    assert any(w for w in words)  # filter is non-degenerate
-
-
-def test_bloom_merge_law_and_membership(spark):
-    """The OR merge law holds on every word (mergeable == 1 throughout,
-    and merged == whole by value), and the membership probe has no false
-    negatives: every in-vocabulary probe hits; the '-oov' probes measure
-    the (deterministic) false-positive rate, which at |vocab| << m/k
-    should be far below 1."""
-    from pl_marker_spark.queries_analytics import q_bloom_member, q_bloom_merge
-
-    rows = q_bloom_merge(spark, SF).collect()
-    assert rows and all(r.mergeable == 1 for r in rows)
-    assert all(r.word_merged == r.word_whole for r in rows)
-    assert all((r.word_even | (0 if r.word_odd == -1 else r.word_odd))
-               == r.word_merged for r in rows if r.word_even != -1)
-
-    probes = q_bloom_member(spark, SF).collect()
-    present = [r for r in probes if not r.probe.endswith("-oov")]
-    absent = [r for r in probes if r.probe.endswith("-oov")]
-    assert present and all(r.hit == 1 for r in present)
-    fp = sum(r.hit for r in absent) / max(len(absent), 1)
-    assert fp < 0.5
-
-
 def test_labelprop_matches_brute_force_and_clusters(spark):
     """Fixed-round LPA equals a pure-python synchronous propagation with
     the same vote rules (neighbors + self, max count, min-label ties);
     communities are non-trivial — fewer distinct labels than nodes, and
-    every near-dup clique collapses to a single community."""
+    each of two cliques joined by one bridge edge collapses to a single
+    community instead of flooding through the bridge."""
+    import random
     from collections import Counter, defaultdict
 
-    from pl_marker_spark.queries_analytics import (
-        LPA_ROUNDS, _neardup_edges, q_graph_labelprop)
+    from pl_marker_spark.graphops import label_propagation
 
-    edges = [(r.doc_a, r.doc_b) for r in _neardup_edges(spark, SF).collect()]
+    rounds = 3
+    cliques = [range(0, 5), range(10, 15)]
+    edges = {(a, b) for c in cliques for a in c for b in c if a < b}
+    edges.add((4, 10))
+    rng = random.Random(5)
+    edges |= {(min(a, b), max(a, b)) for a, b in
+              ((rng.randrange(20, 40), rng.randrange(20, 40))
+               for _ in range(30)) if a != b}
     adj = defaultdict(list)
     for a, b in edges:
         adj[a].append(b)
         adj[b].append(a)
     label = {n: n for n in adj}
-    for _ in range(LPA_ROUNDS):
+    for _ in range(rounds):
         nxt = {}
         for v in adj:
             votes = Counter(label[u] for u in adj[v])
@@ -260,10 +97,14 @@ def test_labelprop_matches_brute_force_and_clusters(spark):
             best = max(votes.items(), key=lambda kv: (kv[1], -kv[0]))
             nxt[v] = best[0]
         label = nxt
-    got = {(r.doc_id, r.community)
-           for r in q_graph_labelprop(spark, SF).collect()}
+    und = spark.createDataFrame(sorted(edges), "doc_a long, doc_b long")
+    got = {(r.node, r.label)
+           for r in label_propagation(und, rounds=rounds).collect()}
     assert got == set(label.items()) and got
     assert len({c for _, c in got}) < len(got)
+    for c in cliques:
+        assert len({label[v] for v in c}) == 1
+    assert label[0] != label[14]
 
 
 def test_adamic_adar_hand_graphs_and_brute_force(spark):

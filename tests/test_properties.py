@@ -260,92 +260,3 @@ def test_o8_inverse_gold_ord_semantics(spark):
         for r in inverse_gold_augment(df, ord_col="rel_ord").collect()
     }
     assert got == want
-
-
-def test_o8_guard_and_label_branches(spark):
-    """run_re.py:265-281 on crafted gold: an asymmetric pair whose reverse
-    IS gold (guard drops both inverses), and a symmetric pair (inverse
-    keeps the same id — the reference's `# bug` branch)."""
-    from pl_marker_spark.queries_catalog import inverse_gold_augment
-    from pl_marker_spark.synth import GOLD_RELATION_SCHEMA
-    from pl_marker_spark.world import REL_LABELS
-
-    art, phys = REL_LABELS.index("ART"), REL_LABELS.index("PHYS")
-    soc = REL_LABELS.index("PER-SOC")
-    g = spark.createDataFrame(
-        [
-            ("c0", 0, 1, 2, 3, 4, "ART"),
-            ("c0", 0, 3, 4, 1, 2, "PHYS"),   # reverse of row 1 is gold
-            ("c0", 1, 5, 6, 7, 8, "PER-SOC"),
-        ],
-        schema=GOLD_RELATION_SCHEMA,
-    )
-    rows = {
-        (r.conv_id, r.turn_idx, r.s1, r.e1, r.s2, r.e2, r.lab_id, r.src)
-        for r in inverse_gold_augment(g).collect()
-    }
-    assert rows == {
-        ("c0", 0, 1, 2, 3, 4, art, "fwd"),
-        ("c0", 0, 3, 4, 1, 2, phys, "fwd"),
-        ("c0", 1, 5, 6, 7, 8, soc, "fwd"),
-        # symmetric inverse keeps the same label id; the two asymmetric
-        # inverses are suppressed by the pos2label guard
-        ("c0", 1, 7, 8, 5, 6, soc, "inv"),
-    }
-
-
-def test_o8_asymmetric_inverse_offset(spark):
-    """An asymmetric inverse with no forward collision gets
-    lab_id + NUM_REL - NUM_SYM (run_re.py:281)."""
-    from pl_marker_spark.queries_catalog import inverse_gold_augment
-    from pl_marker_spark.synth import GOLD_RELATION_SCHEMA
-    from pl_marker_spark.world import NUM_REL, NUM_SYM, REL_LABELS
-
-    org = REL_LABELS.index("ORG-AFF")
-    g = spark.createDataFrame(
-        [("c1", 2, 10, 11, 20, 21, "ORG-AFF")], schema=GOLD_RELATION_SCHEMA
-    )
-    out = {(r.s1, r.s2, r.lab_id, r.src)
-           for r in inverse_gold_augment(g).collect()}
-    assert out == {
-        (10, 20, org, "fwd"),
-        (20, 10, org + NUM_REL - NUM_SYM, "inv"),
-    }
-
-
-def test_salted_pair_join_mega_bucket(spark):
-    from pyspark.sql import functions as F
-
-    from pl_marker_spark.skew import salted_pair_join
-
-    rows = [(i, "hot" if i < 40 else f"cold{i}") for i in range(60)]
-    df = spark.createDataFrame(rows, "id long, bkey string")
-    df = df.withColumn("band", F.lit(0))
-    salted = salted_pair_join(df, ["band", "bkey"], "id", max_bucket=10)
-    plain = (
-        df.alias("a")
-        .join(df.selectExpr("id as b_id", "bkey", "band"), ["band", "bkey"])
-        .filter(F.col("a.id") < F.col("b_id"))
-        .select("id", "b_id")
-    )
-    assert sorted(map(tuple, salted.select("id", "b_id").collect())) == \
-        sorted(map(tuple, plain.collect()))
-    # task-size bound: each (bucket, chunk) keeps <= ceil(40/10)-way split
-    per_chunk = (
-        df.filter(F.col("bkey") == "hot")
-        .groupBy(F.pmod(F.col("id"), F.lit(4)))
-        .count().collect()
-    )
-    assert max(r["count"] for r in per_chunk) <= 10 + 4  # pmod imbalance slack
-
-
-def test_phash_parity(spark):
-    from pyspark.sql import functions as F
-
-    from pl_marker_spark.phash import phash64, phash64_py
-
-    vals = ["hello", "a b c", "", "ünïcode ✓"]
-    sdf = spark.createDataFrame([(v,) for v in vals], "s string")
-    got_spark = [r.h for r in sdf.select(phash64(F.col("s"), 7).alias("h")).collect()]
-    got_py = [phash64_py(v, 7) for v in vals]
-    assert got_spark == got_py

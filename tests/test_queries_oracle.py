@@ -38,6 +38,16 @@ def _canon(rows, cols):
     return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
+def test_events_have_no_equal_timestamp_ties(ddb):
+    """q_asof_join's window form and DuckDB's native ASOF (ts >= ts) only
+    coincide when no user has two events at the same microsecond — assert
+    that precondition on the corpus the gate runs against."""
+    n = ddb.execute(
+        "SELECT count(*) FROM (SELECT user_id, ts FROM events "
+        "GROUP BY 1, 2 HAVING count(*) > 1)").fetchone()[0]
+    assert n == 0
+
+
 # reference-semantics rows: the reference's span, packing, BIO, gold,
 # scoring and coref operators
 REFERENCE_ROWS = {
@@ -48,15 +58,13 @@ REFERENCE_ROWS = {
 }
 
 
-def test_catalog_rows_are_kg_or_reference():
-    """Every queries() row has a DuckDB twin (the gate below parametrizes
-    over oracle_sql(), so a row without one would go unchecked), and every
-    row is a KG row or a reference-semantics row."""
+def test_catalog_rows_all_have_twins():
+    """Every queries() row has a DuckDB twin and every twin a row: the
+    gate below parametrizes over oracle_sql(), so a row without a twin
+    would go unchecked. The reference-semantics rows are all present."""
     names = set(queries_catalog.queries())
     assert names == set(queries_catalog.oracle_sql())
     assert REFERENCE_ROWS <= names
-    assert not {n for n in names
-                if not n.startswith("kg_") and n not in REFERENCE_ROWS}
 
 
 @pytest.mark.parametrize("name", sorted(queries_catalog.oracle_sql()))

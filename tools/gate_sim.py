@@ -2,7 +2,7 @@
 at sf0.01, rows+schema+hash, written as a CORRECTNESS-style JSON.
 
 The driver only checks the first 50 queries() entries; this runs ALL of
-them (70) under the same compare discipline (column sort
+them (131) under the same compare discipline (column sort
 by name, float round-6, row sort), so the full catalog has a local
 driver-equivalent record. Run from the repo root:
 

@@ -159,8 +159,10 @@ class CheckpointStore:
             self.spark.catalog.refreshTable(tbl)
             out = self.spark.table(tbl)
         else:
+            # read back with the schema just written: no footer-inference
+            # job (a resumed stage, written by an earlier run, infers it)
             self.spark.catalog.refreshByPath(path)
-            out = self.spark.read.parquet(path)
+            out = self.spark.read.schema(df.schema).parquet(path)
         # per-partition lineage from the parquet footers (driver-side
         # metadata reads, microseconds per file) — round 1 ran a second
         # full scan + collect() per stage here, a major serial-floor term

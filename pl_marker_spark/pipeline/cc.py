@@ -86,13 +86,25 @@ def _signature(df: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def _local_cc(edge_rows, spark, dtype) -> DataFrame:
-    """Driver-side union-find over a size-bounded edge list; labels each
-    node with the minimum node id of its component — the same labeling the
-    star algorithm converges to (UTF-8 binary string order equals
-    code-point order, so Spark's min and Python's min agree)."""
-    from pyspark.sql.types import StructField, StructType
+# rows a driver-side plan takes: CC's edge list here, the vocabulary in
+# graph.graph_from_surfaces
+LOCAL_THRESHOLD = 100_000
 
+
+def driver_frame(spark, columns: dict, schema: str) -> DataFrame:
+    """A DataFrame over driver-side columns, shipped as one Arrow table:
+    the plan is a ``LocalRelation`` (no parallelized Python RDD, so no job
+    to build or pin it, and ``isLocal()`` holds)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)
+
+
+def local_components(edge_pairs) -> dict:
+    """Driver-side union-find over (u, v) pairs: node -> the minimum node
+    id of its component — the same labeling the star algorithm converges
+    to (UTF-8 binary string order equals code-point order, so Spark's min
+    and Python's min agree)."""
     parent: dict = {}
 
     def find(x):
@@ -103,7 +115,7 @@ def _local_cc(edge_rows, spark, dtype) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for u, v in edge_rows:
+    for u, v in edge_pairs:
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -115,16 +127,12 @@ def _local_cc(edge_rows, spark, dtype) -> DataFrame:
         m = comp_min.get(r)
         if m is None or node < m:
             comp_min[r] = node
-    schema = StructType([
-        StructField("sid", dtype, False),
-        StructField("component", dtype, False),
-    ])
-    rows = [(n, comp_min[find(n)]) for n in parent]
-    return spark.createDataFrame(rows, schema)
+    return {node: comp_min[find(node)] for node in parent}
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 16, local_threshold: int = 100_000,
+    edges: DataFrame, max_iter: int = 16,
+    local_threshold: int = LOCAL_THRESHOLD,
 ) -> DataFrame:
     """edges (src, dst) -> assignment (sid, component); component id is the
     minimum node id in the component.
@@ -154,10 +162,12 @@ def connected_components(
     if local_threshold > 0:
         probe = e.limit(local_threshold + 1).collect()
         if len(probe) <= local_threshold:
-            return _local_cc(
-                [(r["u"], r["v"]) for r in probe],
+            comp = local_components((r["u"], r["v"]) for r in probe)
+            dtype = e.schema["u"].dataType.simpleString()
+            return driver_frame(
                 edges.sparkSession,
-                e.schema["u"].dataType,
+                {"sid": list(comp), "component": list(comp.values())},
+                f"sid {dtype}, component {dtype}",
             )
     cur = e.localCheckpoint()
     # node spine derives from the CHECKPOINTED edge list (round-6): the

@@ -1,79 +1,165 @@
 """Stages 6-8 — entity link → canonicalize → graph materialization.
 
-North-rule extension (no reference equivalent). Orchestrated so each
-intermediate (surfaces, vocab, sim_edges, assignment) is checkpointed once
-and every downstream consumer reads the materialized table — the link/CC
-DAG is never recomputed per output.
+North-rule extension (no reference equivalent). The graph half has two
+sizes of work. ``mention_surfaces``, ``mention_entity`` and ``edges``
+scan the evidence (one row per mention or triple) and are always Spark
+plans. Everything between them — the vocabulary, its similarity edges,
+the component assignment, entity ids and the canonical node table — is
+vocabulary-sized, and the plan for it is chosen from the vocabulary's
+size (the gate of ``graph_from_surfaces``):
+
+- when the vocabulary fits the driver bound (``cc.LOCAL_THRESHOLD``, the
+  bound ``connected_components`` uses for its edge list), one bounded
+  Arrow probe brings it to the driver, where ``link.link_entities_local``
+  and ``cc.local_components`` resolve it in one vectorized pass; the
+  results go back as Arrow-built ``LocalRelation`` tables, and
+  ``mention_entity`` broadcasts the vocabulary map. A 205-row vocabulary
+  then costs a handful of Spark jobs instead of one per shuffle stage;
+- above the bound, ``link_entities`` and ``connected_components`` run as
+  distributed plans, and ``nodes`` is one aggregation over the entity
+  vocabulary.
+
+Both sides produce the same rows (tests/test_scoring_and_graph.py). Each
+stage goes through the caller's ``ck`` once and every downstream consumer
+reads what ``ck`` returned, so no stage is recomputed per output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import connected_components
-from .link import build_vocab, link_entities, mention_surfaces
+from .cc import LOCAL_THRESHOLD, connected_components, driver_frame, local_components
+from .link import build_vocab, link_entities, link_entities_local, mention_surfaces
+
+VOCAB_SCHEMA = ("sid bigint, label string, surface string, norm string, "
+                "n_mentions bigint, entity_id bigint")
+NODES_SCHEMA = ("entity_id bigint, canonical_name string, type string, "
+                "n_mentions bigint, n_surfaces bigint")
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """The default stage materialization: an eager ``localCheckpoint``,
+    except for a driver-built table, which is materialized already."""
+    return df if df.isLocal() else df.localCheckpoint()
 
 
 def build_graph(mentions_refined: DataFrame, triples: DataFrame,
                 turns_tok: DataFrame, ck=None) -> dict[str, DataFrame]:
     """Returns the graph-side tables. ``ck(name, build)`` materializes a
-    stage (checkpoint or persist); default = cache in cluster memory."""
+    stage (checkpoint or persist); default = ``pin``."""
     if ck is None:
         def ck(name, build):
-            return build().localCheckpoint()
+            return pin(build())
 
     surfaces = ck("mention_surfaces",
                   lambda: mention_surfaces(mentions_refined, turns_tok))
     return graph_from_surfaces(surfaces, triples, ck)
 
 
-def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame,
-                        ck=None) -> dict[str, DataFrame]:
-    """The vocab-scale canonicalization half of build_graph, factored so
-    the incremental path (streaming.stream_kg_graph) can re-canonicalize
-    from CUMULATIVE persisted surfaces: link/CC must see all evidence —
-    a new surface can merge two existing entities — while extraction
-    stays a once-per-conversation batch job. Everything downstream of the
-    surfaces table is vocab-sized except the mention_entity join and the
-    triple-endpoint resolution, which scan the evidence tables once."""
-    if ck is None:
-        def ck(name, build):
-            return build().localCheckpoint()
+def _resolve_local(vocab) -> dict[str, tuple]:
+    """sim_edges / entity_assign / entity_vocab / nodes of a driver-side
+    vocabulary (pyarrow table of ``build_vocab``'s columns), each as
+    (columns, schema) for ``driver_frame``."""
+    import numpy as np
+    import pandas as pd
 
-    vocab = ck("entity_vocab_raw", lambda: build_vocab(surfaces))
+    sim = link_entities_local(vocab)
+    comp = local_components(zip(sim["src"].tolist(), sim["dst"].tolist()))
+    ve = vocab.select(["sid", "label", "surface", "norm", "n_mentions"]).to_pandas()
+    ve["entity_id"] = np.fromiter(
+        (comp.get(s, s) for s in ve["sid"].tolist()), np.int64, len(ve))
+    # canonical name: min over (-n_mentions, surface, label) per entity
+    per = (ve.assign(neg=-ve["n_mentions"])
+           .sort_values(["entity_id", "neg", "surface", "label"])
+           .groupby("entity_id", sort=False))
+    nodes = pd.DataFrame({
+        "canonical_name": per["surface"].first(),
+        "type": per["label"].first(),
+        "n_mentions": per["n_mentions"].sum(),
+        "n_surfaces": per.size(),
+    }).reset_index()
+    return {
+        "sim_edges": (sim, "src bigint, dst bigint, sim double"),
+        "entity_assign": ({"sid": list(comp), "component": list(comp.values())},
+                          "sid bigint, component bigint"),
+        "entity_vocab": ({c: ve[c].to_numpy() for c in ve.columns}, VOCAB_SCHEMA),
+        "nodes": ({c: nodes[c].to_numpy() for c in nodes.columns}, NODES_SCHEMA),
+    }
+
+
+def _resolve_spark(vocab: DataFrame, ck, local_threshold: int) -> dict:
+    """The distributed plans for a vocabulary above the driver bound."""
     sim_edges = ck("sim_edges", lambda: link_entities(vocab))
-    assign = ck("entity_assign", lambda: connected_components(sim_edges))
-
-    ventity = (
+    assign = ck("entity_assign", lambda: connected_components(
+        sim_edges, local_threshold=local_threshold))
+    ventity = ck("entity_vocab", lambda: (
         vocab.join(assign, "sid", "left")
         .withColumn("entity_id", F.coalesce("component", F.col("sid")))
-        .select("sid", "label", "surface", "norm", "n_mentions", "entity_id")
-    )
-    ventity = ck("entity_vocab", lambda: ventity)
-
-    w = Window.partitionBy("entity_id").orderBy(F.desc("n_mentions"), F.asc("surface"))
-    canon = (
-        ventity.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("entity_id", F.col("surface").alias("canonical_name"),
-                F.col("label").alias("type"))
-    )
-    nodes = ck(
-        "nodes",
-        lambda: ventity.groupBy("entity_id")
-        .agg(F.sum("n_mentions").alias("n_mentions"),
+        .select("sid", "label", "surface", "norm", "n_mentions", "entity_id")))
+    # canonical name: min over (-n_mentions, surface, label) per entity,
+    # in the same aggregation as the counts (no window, no join back)
+    canon = F.min(F.struct((-F.col("n_mentions")).alias("neg"), "surface", "label"))
+    nodes = ck("nodes", lambda: (
+        ventity.groupBy("entity_id")
+        .agg(canon.alias("c"), F.sum("n_mentions").alias("n_mentions"),
              F.count("*").alias("n_surfaces"))
-        .join(canon, "entity_id")
-        .select("entity_id", "canonical_name", "type", "n_mentions", "n_surfaces"),
-    )
+        .select("entity_id", F.col("c.surface").alias("canonical_name"),
+                F.col("c.label").alias("type"), "n_mentions", "n_surfaces")))
+    return {"sim_edges": sim_edges, "entity_assign": assign,
+            "entity_vocab": ventity, "nodes": nodes}
+
+
+def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame, ck=None,
+                        local_threshold: int = LOCAL_THRESHOLD,
+                        ) -> dict[str, DataFrame]:
+    """The canonicalization half of build_graph, factored so the
+    incremental path (streaming.stream_kg_graph) can re-canonicalize from
+    CUMULATIVE persisted surfaces: link/CC must see all evidence — a new
+    surface can merge two existing entities — while extraction stays a
+    once-per-conversation batch job.
+
+    Size gate: after the ``entity_vocab_raw`` stage, one bounded probe
+    (``limit(local_threshold + 1)`` as Arrow — never an unbounded collect)
+    reads the vocabulary. If it holds at most ``local_threshold`` rows,
+    ``sim_edges``, ``entity_assign``, ``entity_vocab`` and ``nodes`` are
+    resolved on the driver and handed to ``ck`` as ``LocalRelation``
+    tables, and ``mention_entity`` is a broadcast join on the local map.
+    Otherwise all four are Spark plans (``link_entities``, the
+    ``connected_components`` star path or its own edge-list gate, a join
+    and one aggregation). On both sides ``entity_vocab_raw``,
+    ``mention_entity`` and ``edges`` are Spark plans, and the stages
+    reach ``ck`` under the same seven names. ``local_threshold=0`` forces
+    the Spark side (tests)."""
+    if ck is None:
+        def ck(name, build):
+            return pin(build())
+
+    vocab = ck("entity_vocab_raw", lambda: build_vocab(surfaces))
+    probe = None
+    if local_threshold > 0:
+        probe = (vocab.select("sid", "label", "surface", "norm", "n_mentions",
+                              "shingles")
+                 .limit(local_threshold + 1).toArrow())
+    if probe is not None and probe.num_rows <= local_threshold:
+        # resolved inside the first stage's build, so a hook that times
+        # ``ck`` builds sees the driver work
+        resolved = functools.cache(lambda: _resolve_local(probe))
+        g = {name: ck(name, lambda name=name: driver_frame(
+                 vocab.sparkSession, *resolved()[name]))
+             for name in ("sim_edges", "entity_assign", "entity_vocab", "nodes")}
+        vmap = F.broadcast(g["entity_vocab"].select("label", "surface", "entity_id"))
+    else:
+        g = _resolve_spark(vocab, ck, local_threshold)
+        vmap = g["entity_vocab"].select("label", "surface", "entity_id")
 
     mention_entity = ck(
         "mention_entity",
-        lambda: surfaces.join(
-            ventity.select("label", "surface", "entity_id"), ["label", "surface"]
-        ).select("conv_id", "turn_idx", "start", "end", "label", "surface",
-                 "entity_id"),
+        lambda: surfaces.join(vmap, ["label", "surface"]).select(
+            "conv_id", "turn_idx", "start", "end", "label", "surface",
+            "entity_id"),
     )
 
     me = mention_entity.select("conv_id", "turn_idx", "start", "end", "entity_id")
@@ -110,10 +196,7 @@ def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame,
     edges = ck("edges", build_edges)
     return {
         "surfaces": surfaces,
-        "entity_vocab": ventity,
-        "sim_edges": sim_edges,
-        "entity_assign": assign,
+        **g,
         "mention_entity": mention_entity,
-        "nodes": nodes,
         "edges": edges,
     }

@@ -16,6 +16,9 @@ mandated by the north rule. Design (SURVEY.md §2.6 "extensions"):
 Scales: the band self-join is the only quadratic risk and it is bounded per
 (label, band, bucket) — explicitly salted above ``skew.salted_pair_join``'s
 task bound (round-1 VERDICT item #7: AQE alone can miss extreme buckets).
+A vocabulary small enough for the driver takes ``link_entities_local``
+instead (the size gate is in ``graph.graph_from_surfaces``): the same
+steps over numpy/pandas columns, with the same output rows.
 
 Hashing is the portable md5 family (phash.py) so the single-process graph
 oracle (oracle_graph.py) reproduces vocab ids, buckets and edges bit-for-bit
@@ -165,3 +168,60 @@ def link_entities(vocab: DataFrame) -> DataFrame:
         .filter((F.col("sim") >= JACCARD_THRESHOLD) | (F.col("norm") == F.col("b_norm")))
         .select(F.col("sid").alias("src"), F.col("b_sid").alias("dst"), "sim")
     )
+
+
+def _round_half_up(x: float, nd: int) -> float:
+    """Spark's ``F.round`` on a double: the shortest round-trip decimal of
+    ``x`` (Python's repr), rounded HALF_UP."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP))
+
+
+def link_entities_local(vocab) -> dict:
+    """Driver twin of :func:`link_entities` for a vocabulary that fits on
+    the driver: ``vocab`` is a pyarrow table with ``sid``, ``label``,
+    ``norm`` and ``shingles`` (``build_vocab``'s columns). Returns the
+    similarity edges as columns ``src``/``dst``/``sim`` — the same rows,
+    bit for bit: the same portable hashes and affine minima (numpy, one
+    pass over the flattened shingles), the same (label, band, bkey)
+    buckets and ``sid < b_sid`` pairs, and the Jaccard ratio rounded
+    HALF_UP to 9 digits as ``F.round`` does."""
+    import numpy as np
+    import pandas as pd
+
+    sid = vocab["sid"].to_numpy()
+    label = vocab["label"].to_numpy(zero_copy_only=False)
+    norm = vocab["norm"].to_numpy(zero_copy_only=False)
+    shingles = vocab["shingles"].to_pylist()
+    n = len(sid)
+    if n == 0:
+        return {"src": sid, "dst": sid, "sim": np.zeros(0)}
+    sizes = np.fromiter(map(len, shingles), np.int64, n)
+    flat = [s for sh in shingles for s in sh]
+    shingle_hash = {s: phash64_py(s, "sh", chars=8) for s in set(flat)}
+    hs = np.fromiter(map(shingle_hash.__getitem__, flat), np.int64, len(flat))
+    # a < 2^31, h < 2^32, b < 2^31: a*h + b < 2^63, exact in int64
+    perm = (np.array(LINK_A)[:, None] * hs + np.array(LINK_B)[:, None]) % LINK_P
+    starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+    sig = np.minimum.reduceat(perm, starts, axis=1).T.tolist()  # (n, N_HASHES)
+    rows_per_band = N_HASHES // N_BANDS
+    banded = pd.DataFrame({
+        "label": np.tile(label, N_BANDS),
+        "band": np.repeat(np.arange(N_BANDS), n),
+        "bkey": [phash64_py(":".join(map(str, s[b * rows_per_band:(b + 1) * rows_per_band])),
+                            f"band{b}")
+                 for b in range(N_BANDS) for s in sig],
+        "i": np.tile(np.arange(n), N_BANDS),
+    })
+    pairs = banded.merge(banded, on=["label", "band", "bkey"])
+    i, j = pairs["i_x"].to_numpy(), pairs["i_y"].to_numpy()
+    keep = sid[i] < sid[j]
+    ij = np.unique(np.stack([i[keep], j[keep]], axis=1), axis=0)
+    i, j = ij[:, 0], ij[:, 1]
+    sets = [frozenset(sh) for sh in shingles]
+    inter = np.fromiter((len(sets[a] & sets[b]) for a, b in zip(i, j)), np.int64, len(i))
+    sim = np.array([_round_half_up(x, 9)
+                    for x in (inter / (sizes[i] + sizes[j] - inter)).tolist()])
+    keep = (sim >= JACCARD_THRESHOLD) | (norm[i] == norm[j])
+    return {"src": sid[i[keep]], "dst": sid[j[keep]], "sim": sim[keep]}

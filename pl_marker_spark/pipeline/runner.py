@@ -42,7 +42,10 @@ def run_extraction(
     so a store-less plan never evaluates a stage twice: each consumer of
     ``triples``, ``mentions`` or ``mentions_refined`` reads the pinned
     tables, not a re-run of the grouped-map kernels (the streaming sinks
-    write two or more outputs of one micro-batch this way). Pinning
+    write two or more outputs of one micro-batch this way). A pinned stage
+    the store would bucket by ``conv_id`` is read hash-partitioned into
+    ``defaultParallelism`` parts, so its grouped maps run one task per
+    core, as over the bucketed table. Pinning
     ``turns_tok`` on-heap was measured at ~2x e2e at 10^6 turns (below),
     so a one-shot run at that scale should pass a CheckpointStore.
 
@@ -80,7 +83,16 @@ def run_extraction(
             # scan's own partitioning instead of re-shuffling the stage
             return store.stage(name, build, bucket_by=bucket_by)
         if name in coarse_parquet or name in coarse_mem:
-            return build().localCheckpoint()
+            df = build().localCheckpoint()
+            if bucket_by:
+                # the store-less twin of a bucketed stage: consumers keyed
+                # on conv_id read one partition per core. A pinned table
+                # does not carry its partitioning into their plans, and
+                # AQE merges their own shuffle of a small batch into one
+                # task; an explicit-count repartition it does not merge
+                df = df.repartition(spark.sparkContext.defaultParallelism,
+                                    *bucket_by)
+            return df
         return build()
 
     turns_tok = ck("turns_tok",
@@ -237,7 +249,7 @@ def run_full_pipeline(
     granularity: str = "fine",
 ) -> dict[str, DataFrame]:
     """Extraction + entity linking + canonicalization + graph materialize."""
-    from .graph import build_graph
+    from .graph import build_graph, pin
 
     out = run_extraction(spark, transcripts, cfg, store, granularity)
     if store is None:
@@ -252,7 +264,7 @@ def run_full_pipeline(
         def ck(name, build):
             if name in coarse_names:
                 return store.stage(name, build)
-            return build().localCheckpoint()
+            return pin(build())
 
     g = build_graph(out["mentions_refined"], out["triples"], out["turns_tok"], ck=ck)
     out.update(g)

@@ -733,11 +733,17 @@ def stream_kg_graph(
        a newly arrived alias can merge two previously distinct entities
        (entity ids are min-sid component ids, so merges only ever lower
        an entity's id). The evidence globs are read with the schema just
-       written (no schema-inference job). The ``ck`` passed in writes
+       written (no schema-inference job). The cumulative vocabulary is
+       size-gated: within the driver bound it is linked, componentized
+       and canonicalized on the driver, and ``sim_edges`` /
+       ``entity_assign`` / ``entity_vocab`` / ``nodes`` come back as
+       ``LocalRelation`` tables, which ``pin`` leaves as they are; above
+       it they are Spark plans. ``mention_entity`` and ``edges`` are
+       Spark plans either way. The ``ck`` passed in writes
        nodes / edges / mention_entity straight into the versioned state
        dir ``{out_dir}/state_v<id>`` as those stages' own
        materialization (each is computed and written once; edges reads
-       mention_entity back from there) and pins the others in memory;
+       mention_entity back from there) and pins the Spark-plan others;
     4. publishes the version by the atomic ``_LATEST`` pointer flip and
        prunes old versions to ``retain``. A crash before the flip leaves
        the previous version published; the restarted query replays the
@@ -763,7 +769,7 @@ def stream_kg_graph(
 
     North-rule extension (streaming); no reference counterpart — the
     reference is a pure batch pipeline (SURVEY.md §2.6 end note)."""
-    from .pipeline.graph import graph_from_surfaces, mention_surfaces
+    from .pipeline.graph import graph_from_surfaces, mention_surfaces, pin
     from .pipeline.runner import run_extraction
 
     stream = read_transcript_stream(spark, in_dir)
@@ -801,7 +807,7 @@ def stream_kg_graph(
             # the published tables' own materialization is the version-dir
             # write; the rest are pinned as graph_from_surfaces' default
             if name not in KG_STATE_TABLES:
-                return build().localCheckpoint()
+                return pin(build())
             df = build()
             df.write.mode("overwrite").parquet(f"{vdir}/{name}")
             return spark.read.schema(df.schema).parquet(f"{vdir}/{name}")

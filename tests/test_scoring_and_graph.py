@@ -79,6 +79,104 @@ def test_cc_local_matches_distributed(spark):
         assert local == dist and local
 
 
+def test_cc_local_assignment_is_local_relation(spark):
+    """The size-gated driver union-find hands its assignment back as an
+    Arrow-built LocalRelation — no parallelized Python RDD, so pinning it
+    starts no job."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
+    assign = connected_components(edges)
+    plan = assign._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert assign.isLocal()
+
+
+# (label, surface, n_mentions): an alias-rich vocabulary for the gate of
+# graph_from_surfaces. The five "northwind" ORG surfaces chain through
+# near-duplicate edges (0.62-0.83) into one component, together with two
+# surfaces whose norm equals "northwind traders" (case, punctuation);
+# "northwind trader" and "northwind traders" tie on n_mentions for the
+# canonical pick. "redwood"/"redwoodia" score exactly 0.6 (6 of 10
+# shingles); "bluestone"/"bluestoneville" share an LSH band but score
+# 0.533 and stay apart. "northwind traders" and "redwood" are also PER
+# surfaces, which blocking by label keeps out of the ORG entities.
+ALIAS_VOCAB = [
+    ("ORG", "northwind traders", 3), ("ORG", "northwind trader", 3),
+    ("ORG", "northwind tradersinc", 1), ("ORG", "northwind trading", 2),
+    ("ORG", "nordwind traders", 1), ("ORG", "Northwind Traders", 2),
+    ("ORG", "northwind traders.", 1), ("ORG", "Acme, Inc.", 1),
+    ("ORG", "acme inc", 2), ("ORG", "redwood", 2), ("ORG", "redwoodia", 2),
+    ("ORG", "bluestone", 1), ("ORG", "bluestoneville", 1),
+    ("PER", "northwind traders", 1), ("PER", "redwood", 1),
+    ("PER", "ada lovelace", 2),
+]
+
+
+def test_graph_driver_path_equals_spark_path(spark):
+    """graph_from_surfaces resolves a vocabulary within its bound on the
+    driver; with the bound at 0 every stage is a Spark plan (link join,
+    star-path CC, aggregation). Both must return the same rows in all
+    seven tables. The pipeline must also not import the graph oracle, so
+    the kg_graph_* gates keep comparing two independent implementations."""
+    import ast
+    import pathlib
+
+    import pl_marker_spark.pipeline as pipeline_pkg
+    from pl_marker_spark.pipeline.graph import graph_from_surfaces
+
+    surfaces, spans = [], []
+    for label, surface, n in ALIAS_VOCAB:
+        for _ in range(n):
+            k = len(surfaces)
+            span = (f"c{k // 12}", k // 6, 2 * k, 2 * k + 1)
+            surfaces.append((*span, label, 0.5 + k / 100, surface))
+            spans.append(span)
+    triples = [
+        (c1, t1, s1, e1, s2, e2, "works_for" if k % 2 else "located_in", 0.25 + k / 7)
+        for k, ((c1, t1, s1, e1), (c2, t2, s2, e2))
+        in enumerate(zip(spans, spans[1:] + spans[:1])) if (c1, t1) == (c2, t2)
+    ] + [("c0", 0, 900, 901, 0, 1, "works_for", 0.5)]  # no mention at 900
+    surf = spark.createDataFrame(
+        surfaces, "conv_id string, turn_idx int, start int, end int, "
+        "label string, score double, surface string")
+    trip = spark.createDataFrame(
+        triples, "conv_id string, turn_idx int, s1 int, e1 int, s2 int, "
+        "e2 int, pred string, score double")
+
+    local = graph_from_surfaces(surf, trip)
+    dist = graph_from_surfaces(surf, trip, local_threshold=0)
+    assert local["nodes"].isLocal() and not dist["nodes"].isLocal()
+    rows = {name: sorted(tuple(r) for r in df.collect()) for name, df in local.items()}
+    assert len(rows) == 7
+    for name, df in dist.items():
+        assert sorted(tuple(r) for r in df.collect()) == rows[name], name
+
+    by_surface = {(r[1], r[2]): r[5] for r in rows["entity_vocab"]}
+    northwind = by_surface[("ORG", "northwind traders")]
+    assert {s for (lab, s), e in by_surface.items() if e == northwind} == {
+        "northwind traders", "northwind trader", "northwind tradersinc",
+        "northwind trading", "nordwind traders", "Northwind Traders",
+        "northwind traders."}
+    node = {r[0]: r[1:] for r in rows["nodes"]}
+    assert node[northwind] == ("northwind trader", "ORG", 13, 7)
+    assert by_surface[("ORG", "Acme, Inc.")] == by_surface[("ORG", "acme inc")]
+    assert by_surface[("ORG", "redwood")] == by_surface[("ORG", "redwoodia")]
+    assert 0.6 in {r[2] for r in rows["sim_edges"]}
+    assert by_surface[("ORG", "bluestone")] != by_surface[("ORG", "bluestoneville")]
+    assert by_surface[("PER", "northwind traders")] != northwind
+    assert len(rows["edges"]) > 3
+
+    pkg = pathlib.Path(pipeline_pkg.__file__).parent
+    for path in pkg.glob("*.py"):
+        for node_ in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node_, ast.ImportFrom):
+                names = [node_.module or ""] + [a.name for a in node_.names]
+            elif isinstance(node_, ast.Import):
+                names = [a.name for a in node_.names]
+            else:
+                continue
+            assert not any("oracle_graph" in n for n in names), path.name
+
+
 def test_graph_build(spark, everything):
     _, _, out = everything
     g = build_graph(out["mentions_refined"], out["triples"], out["turns_tok"])

@@ -293,10 +293,15 @@ def test_storeless_extraction_runs_its_grouped_map_once(spark):
     on the production profile (single-pass fused NER + grouped RE) neither
     ``triples`` nor ``mentions_refined`` re-runs the single-pass grouped
     map. Left lazy, each output's plan held it twice, so every write of
-    an output re-ran extraction twice."""
+    an output re-ran extraction twice. The grouped map itself runs one
+    task per core, as over the store's bucketed ``turns_tok``: AQE would
+    merge its shuffle of a small batch into one partition."""
     cfg = replace(DEFAULT_CONFIG, ner_decode="fused", re_decode="grouped")
     out = run_extraction(spark, synth.transcripts_df(spark, 4), cfg)
     for name in ("triples", "mentions_refined"):
         plan = out[name]._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan, name
     assert out["triples"].count() > 0
+    # ``mentions`` filters the pinned extract table: one partition per task
+    assert (out["mentions"].rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism)

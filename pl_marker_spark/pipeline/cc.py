@@ -86,8 +86,7 @@ def _signature(df: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-# rows a driver-side plan takes: CC's edge list here, the vocabulary in
-# graph.graph_from_surfaces
+# deduped edges the driver-side union-find takes
 LOCAL_THRESHOLD = 100_000
 
 

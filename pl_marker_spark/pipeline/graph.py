@@ -8,16 +8,18 @@ the component assignment, entity ids and the canonical node table — is
 vocabulary-sized, and the plan for it is chosen from the vocabulary's
 size (the gate of ``graph_from_surfaces``):
 
-- when the vocabulary fits the driver bound (``cc.LOCAL_THRESHOLD``, the
-  bound ``connected_components`` uses for its edge list), one bounded
-  Arrow probe brings it to the driver, where ``link.link_entities_local``
-  and ``cc.local_components`` resolve it in one vectorized pass; the
-  results go back as Arrow-built ``LocalRelation`` tables, and
-  ``mention_entity`` broadcasts the vocabulary map. A 205-row vocabulary
-  then costs a handful of Spark jobs instead of one per shuffle stage;
-- above the bound, ``link_entities`` and ``connected_components`` run as
-  distributed plans, and ``nodes`` is one aggregation over the entity
-  vocabulary.
+- when the vocabulary has at most ``VOCAB_LOCAL_THRESHOLD`` rows, one
+  bounded Arrow probe brings it to the driver, where
+  ``link.link_entities_local`` and ``cc.local_components`` resolve it in
+  one vectorized pass; the results go back as Arrow-built
+  ``LocalRelation`` tables, and ``mention_entity`` broadcasts the
+  vocabulary map. A 205-row vocabulary then costs a handful of Spark
+  jobs instead of one per shuffle stage;
+- above that bound, or when the probed vocabulary's LSH buckets would
+  self-join into more than ``MAX_BAND_ROWS`` rows (a hot bucket, which
+  the salted Spark join bounds per task), ``link_entities`` and
+  ``connected_components`` run as distributed plans, and ``nodes`` is
+  one aggregation over the entity vocabulary.
 
 Both sides produce the same rows (tests/test_scoring_and_graph.py). Each
 stage goes through the caller's ``ck`` once and every downstream consumer
@@ -25,8 +27,6 @@ reads what ``ck`` returned, so no stage is recomputed per output.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +38,14 @@ VOCAB_SCHEMA = ("sid bigint, label string, surface string, norm string, "
                 "n_mentions bigint, entity_id bigint")
 NODES_SCHEMA = ("entity_id bigint, canonical_name string, type string, "
                 "n_mentions bigint, n_surfaces bigint")
+# the driver side of the vocabulary gate: at most VOCAB_LOCAL_THRESHOLD
+# rows whose LSH buckets self-join into at most MAX_BAND_ROWS rows. Timed
+# on 4 cores, the driver was faster at every row count tried (10k-200k
+# near-duplicate names); the row bound stops where its Python heap
+# passed 0.7 GB. At 4M band rows the driver was twice as fast; at 8M
+# the two sides tied
+VOCAB_LOCAL_THRESHOLD = 100_000
+MAX_BAND_ROWS = 4_000_000
 
 
 def pin(df: DataFrame) -> DataFrame:
@@ -59,14 +67,14 @@ def build_graph(mentions_refined: DataFrame, triples: DataFrame,
     return graph_from_surfaces(surfaces, triples, ck)
 
 
-def _resolve_local(vocab) -> dict[str, tuple]:
+def _resolve_local(vocab, sim: dict) -> dict[str, tuple]:
     """sim_edges / entity_assign / entity_vocab / nodes of a driver-side
-    vocabulary (pyarrow table of ``build_vocab``'s columns), each as
-    (columns, schema) for ``driver_frame``."""
+    vocabulary (pyarrow table of ``build_vocab``'s columns) and its
+    similarity edges (``link_entities_local``), each as (columns, schema)
+    for ``driver_frame``."""
     import numpy as np
     import pandas as pd
 
-    sim = link_entities_local(vocab)
     comp = local_components(zip(sim["src"].tolist(), sim["dst"].tolist()))
     ve = vocab.select(["sid", "label", "surface", "norm", "n_mentions"]).to_pandas()
     ve["entity_id"] = np.fromiter(
@@ -90,11 +98,13 @@ def _resolve_local(vocab) -> dict[str, tuple]:
     }
 
 
-def _resolve_spark(vocab: DataFrame, ck, local_threshold: int) -> dict:
-    """The distributed plans for a vocabulary above the driver bound."""
-    sim_edges = ck("sim_edges", lambda: link_entities(vocab))
+def _resolve_spark(vocab: DataFrame, ck, sim_edges: DataFrame,
+                   local_threshold: int) -> dict:
+    """The distributed plans for a vocabulary the driver does not take."""
+    # CC keeps its own edge-list gate; a forced Spark side (bound 0) also
+    # forces the star path
     assign = ck("entity_assign", lambda: connected_components(
-        sim_edges, local_threshold=local_threshold))
+        sim_edges, local_threshold=LOCAL_THRESHOLD if local_threshold else 0))
     ventity = ck("entity_vocab", lambda: (
         vocab.join(assign, "sid", "left")
         .withColumn("entity_id", F.coalesce("component", F.col("sid")))
@@ -113,7 +123,7 @@ def _resolve_spark(vocab: DataFrame, ck, local_threshold: int) -> dict:
 
 
 def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame, ck=None,
-                        local_threshold: int = LOCAL_THRESHOLD,
+                        local_threshold: int = VOCAB_LOCAL_THRESHOLD,
                         ) -> dict[str, DataFrame]:
     """The canonicalization half of build_graph, factored so the
     incremental path (streaming.stream_kg_graph) can re-canonicalize from
@@ -123,16 +133,17 @@ def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame, ck=None,
 
     Size gate: after the ``entity_vocab_raw`` stage, one bounded probe
     (``limit(local_threshold + 1)`` as Arrow — never an unbounded collect)
-    reads the vocabulary. If it holds at most ``local_threshold`` rows,
+    reads the vocabulary. If it holds at most ``local_threshold`` rows and
+    its LSH buckets self-join into at most ``MAX_BAND_ROWS`` rows,
     ``sim_edges``, ``entity_assign``, ``entity_vocab`` and ``nodes`` are
     resolved on the driver and handed to ``ck`` as ``LocalRelation``
     tables, and ``mention_entity`` is a broadcast join on the local map.
-    Otherwise all four are Spark plans (``link_entities``, the
-    ``connected_components`` star path or its own edge-list gate, a join
-    and one aggregation). On both sides ``entity_vocab_raw``,
-    ``mention_entity`` and ``edges`` are Spark plans, and the stages
-    reach ``ck`` under the same seven names. ``local_threshold=0`` forces
-    the Spark side (tests)."""
+    Otherwise all four are Spark plans (``link_entities``,
+    ``connected_components`` with its own edge-list gate, a join and one
+    aggregation). On both sides ``entity_vocab_raw``, ``mention_entity``
+    and ``edges`` are Spark plans, and the stages reach ``ck`` under the
+    same seven names. ``local_threshold=0`` forces the Spark side, CC's
+    star path included (tests)."""
     if ck is None:
         def ck(name, build):
             return pin(build())
@@ -143,16 +154,30 @@ def graph_from_surfaces(surfaces: DataFrame, triples: DataFrame, ck=None,
         probe = (vocab.select("sid", "label", "surface", "norm", "n_mentions",
                               "shingles")
                  .limit(local_threshold + 1).toArrow())
-    if probe is not None and probe.num_rows <= local_threshold:
-        # resolved inside the first stage's build, so a hook that times
-        # ``ck`` builds sees the driver work
-        resolved = functools.cache(lambda: _resolve_local(probe))
-        g = {name: ck(name, lambda name=name: driver_frame(
-                 vocab.sparkSession, *resolved()[name]))
-             for name in ("sim_edges", "entity_assign", "entity_vocab", "nodes")}
+        if probe.num_rows > local_threshold:
+            probe = None
+    local: dict = {}
+
+    def build_sim():
+        # the driver work runs inside the first stage's build, so a hook
+        # that times ``ck`` builds sees it
+        sim = link_entities_local(probe, MAX_BAND_ROWS)
+        if sim is None:  # a hot LSH bucket: the salted Spark join
+            return link_entities(vocab)
+        local.update(_resolve_local(probe, sim))
+        return driver_frame(vocab.sparkSession, *local["sim_edges"])
+
+    sim_edges = ck("sim_edges", build_sim if probe is not None
+                   else lambda: link_entities(vocab))
+    if local:
+        g = {"sim_edges": sim_edges,
+             **{name: ck(name, lambda name=name: driver_frame(
+                 vocab.sparkSession, *local[name]))
+                for name in ("entity_assign", "entity_vocab", "nodes")}}
         vmap = F.broadcast(g["entity_vocab"].select("label", "surface", "entity_id"))
     else:
-        g = _resolve_spark(vocab, ck, local_threshold)
+        # includes a resumed ``sim_edges`` stage, whose build did not run
+        g = _resolve_spark(vocab, ck, sim_edges, local_threshold)
         vmap = g["entity_vocab"].select("label", "surface", "entity_id")
 
     mention_entity = ck(

@@ -178,7 +178,7 @@ def _round_half_up(x: float, nd: int) -> float:
     return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-nd), ROUND_HALF_UP))
 
 
-def link_entities_local(vocab) -> dict:
+def link_entities_local(vocab, max_band_rows: int) -> dict | None:
     """Driver twin of :func:`link_entities` for a vocabulary that fits on
     the driver: ``vocab`` is a pyarrow table with ``sid``, ``label``,
     ``norm`` and ``shingles`` (``build_vocab``'s columns). Returns the
@@ -186,7 +186,12 @@ def link_entities_local(vocab) -> dict:
     bit for bit: the same portable hashes and affine minima (numpy, one
     pass over the flattened shingles), the same (label, band, bkey)
     buckets and ``sid < b_sid`` pairs, and the Jaccard ratio rounded
-    HALF_UP to 9 digits as ``F.round`` does."""
+    HALF_UP to 9 digits as ``F.round`` does.
+
+    Returns None instead when the bucket self-join would produce more
+    than ``max_band_rows`` rows (the sum of squared bucket sizes): a hot
+    bucket, which the salted Spark join bounds per task, would be one
+    unbounded merge and a per-pair Python loop here."""
     import numpy as np
     import pandas as pd
 
@@ -214,6 +219,9 @@ def link_entities_local(vocab) -> dict:
                  for b in range(N_BANDS) for s in sig],
         "i": np.tile(np.arange(n), N_BANDS),
     })
+    bucket = banded.groupby(["label", "band", "bkey"], sort=False).size().to_numpy()
+    if int((bucket * bucket).sum()) > max_band_rows:
+        return None
     pairs = banded.merge(banded, on=["label", "band", "bkey"])
     i, j = pairs["i_x"].to_numpy(), pairs["i_y"].to_numpy()
     keep = sid[i] < sid[j]

@@ -791,10 +791,11 @@ def stream_kg_graph(
         # run_extraction pins its stages, so neither write below re-runs it
         out = run_extraction(spark, batch_df, cfg)
         surfaces = mention_surfaces(out["mentions_refined"], out["turns_tok"])
-        # 2. evidence append (batch-id-named overwrite = replay-safe)
-        surfaces.write.mode("overwrite").parquet(
+        # 2. evidence append (batch-id-named overwrite = replay-safe), one
+        # file per batch: every later batch re-reads the cumulative globs
+        surfaces.coalesce(1).write.mode("overwrite").parquet(
             f"{out_dir}/surfaces_b{batch_id}")
-        out["triples"].write.mode("overwrite").parquet(
+        out["triples"].coalesce(1).write.mode("overwrite").parquet(
             f"{out_dir}/triples_b{batch_id}")
         # 3. vocab-scale re-canonicalization over cumulative evidence
         # (given the schema, the reads start no schema-inference job)

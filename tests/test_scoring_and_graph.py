@@ -111,20 +111,12 @@ ALIAS_VOCAB = [
 ]
 
 
-def test_graph_driver_path_equals_spark_path(spark):
-    """graph_from_surfaces resolves a vocabulary within its bound on the
-    driver; with the bound at 0 every stage is a Spark plan (link join,
-    star-path CC, aggregation). Both must return the same rows in all
-    seven tables. The pipeline must also not import the graph oracle, so
-    the kg_graph_* gates keep comparing two independent implementations."""
-    import ast
-    import pathlib
-
-    import pl_marker_spark.pipeline as pipeline_pkg
-    from pl_marker_spark.pipeline.graph import graph_from_surfaces
-
+def _graph_input(spark, vocab):
+    """surfaces / triples DataFrames with ``n`` mentions of each (label,
+    surface, n) vocabulary entry and triples between neighbouring
+    mentions of a turn."""
     surfaces, spans = [], []
-    for label, surface, n in ALIAS_VOCAB:
+    for label, surface, n in vocab:
         for _ in range(n):
             k = len(surfaces)
             span = (f"c{k // 12}", k // 6, 2 * k, 2 * k + 1)
@@ -141,14 +133,34 @@ def test_graph_driver_path_equals_spark_path(spark):
     trip = spark.createDataFrame(
         triples, "conv_id string, turn_idx int, s1 int, e1 int, s2 int, "
         "e2 int, pred string, score double")
+    return surf, trip
 
-    local = graph_from_surfaces(surf, trip)
-    dist = graph_from_surfaces(surf, trip, local_threshold=0)
-    assert local["nodes"].isLocal() and not dist["nodes"].isLocal()
+
+def _same_graph_rows(local, dist):
     rows = {name: sorted(tuple(r) for r in df.collect()) for name, df in local.items()}
     assert len(rows) == 7
     for name, df in dist.items():
         assert sorted(tuple(r) for r in df.collect()) == rows[name], name
+    return rows
+
+
+def test_graph_driver_path_equals_spark_path(spark):
+    """graph_from_surfaces resolves a vocabulary within its bound on the
+    driver; with the bound at 0 every stage is a Spark plan (link join,
+    star-path CC, aggregation). Both must return the same rows in all
+    seven tables. The pipeline must also not import the graph oracle, so
+    the kg_graph_* gates keep comparing two independent implementations."""
+    import ast
+    import pathlib
+
+    import pl_marker_spark.pipeline as pipeline_pkg
+    from pl_marker_spark.pipeline.graph import graph_from_surfaces
+
+    surf, trip = _graph_input(spark, ALIAS_VOCAB)
+    local = graph_from_surfaces(surf, trip)
+    dist = graph_from_surfaces(surf, trip, local_threshold=0)
+    assert local["nodes"].isLocal() and not dist["nodes"].isLocal()
+    rows = _same_graph_rows(local, dist)
 
     by_surface = {(r[1], r[2]): r[5] for r in rows["entity_vocab"]}
     northwind = by_surface[("ORG", "northwind traders")]
@@ -175,6 +187,25 @@ def test_graph_driver_path_equals_spark_path(spark):
             else:
                 continue
             assert not any("oracle_graph" in n for n in names), path.name
+
+
+def test_graph_hot_bucket_takes_the_spark_path(spark, monkeypatch):
+    """A vocabulary within the row bound whose LSH bucket self-join would
+    exceed ``MAX_BAND_ROWS`` is linked by the salted Spark join, not by
+    an unbounded driver merge, with the same rows."""
+    from pl_marker_spark.pipeline import graph
+
+    # 60 surfaces with one norm ("acme") have one signature, so they
+    # share a bucket in every band: 4 * 60^2 = 14,400 of the band rows
+    hot = [("ORG", "Acme" + "." * k, 1 + k % 2) for k in range(60)]
+    surf, trip = _graph_input(spark, hot + ALIAS_VOCAB)
+    local = graph.graph_from_surfaces(surf, trip)
+    monkeypatch.setattr(graph, "MAX_BAND_ROWS", 14_400)
+    dist = graph.graph_from_surfaces(surf, trip)
+    assert local["nodes"].isLocal() and not dist["nodes"].isLocal()
+    assert not dist["sim_edges"].isLocal()
+    rows = _same_graph_rows(local, dist)
+    assert len(rows["sim_edges"]) >= 60 * 59 // 2
 
 
 def test_graph_build(spark, everything):

@@ -635,6 +635,10 @@ def kg_stream_done(spark, corpus, tmp_path_factory):
     _write_chunks(corpus, indir, with_end_markers=False, split_convs=False)
     progress = _await_stream(stream_kg_graph(spark, indir, outdir, PROD_CONFIG))
     assert [p["numInputRows"] > 0 for p in progress] == [True, True]
+    # one evidence file per batch: every later batch re-reads the globs
+    evidence = {d: f for d, f in _file_names(outdir).items()
+                if not d.startswith("state_v")}
+    assert len(evidence) == 4 and all(len(f) == 1 for f in evidence.values())
     return indir, outdir
 
 

@@ -41,8 +41,8 @@ NODES_SCHEMA = ("entity_id bigint, canonical_name string, type string, "
 # the driver side of the vocabulary gate: at most VOCAB_LOCAL_THRESHOLD
 # rows whose LSH buckets self-join into at most MAX_BAND_ROWS rows. Timed
 # on 4 cores, the driver was faster at every row count tried (10k-200k
-# near-duplicate names); the row bound stops where its Python heap
-# passed 0.7 GB. At 4M band rows the driver was twice as fast; at 8M
+# near-duplicate names); the row bound keeps its Python heap under
+# 0.7 GB. At 4M band rows the driver was twice as fast; at 8M
 # the two sides tied
 VOCAB_LOCAL_THRESHOLD = 100_000
 MAX_BAND_ROWS = 4_000_000

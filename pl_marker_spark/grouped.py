@@ -6,8 +6,8 @@ overhead — ruinous when groups are tiny and numerous (one group per
 the same semantics with one shuffle and ONE pandas call per Arrow batch:
 
     repartition(keys) → sortWithinPartitions(keys) → mapInPandas
-      → pandas groupby per batch, carrying the (possibly incomplete)
-        trailing group into the next batch.
+      → one ``fn`` call per batch of whole groups, carrying the (possibly
+        incomplete) trailing group into the next batch.
 
 The carry is required for correctness: Arrow slices a partition into
 batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, so a
@@ -28,36 +28,22 @@ def sorted_grouped_map(
     keys: list[str],
     fn: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    num_partitions: int | None = None,
-    batch: bool = False,
 ) -> DataFrame:
-    """Apply ``fn`` to each group of rows sharing ``keys`` (equivalent to
-    groupBy().applyInPandas but with per-batch instead of per-group
-    overhead). ``fn`` receives one group's rows and returns a DataFrame with
-    columns matching ``schema``.
-
-    With ``batch=True`` the per-group pandas dispatch is skipped entirely:
-    ``fn`` receives a *multi-group* frame (every group in it complete, rows
-    key-contiguous) and handles grouping internally — the fast path for
-    numpy kernels over millions of tiny groups, where even one
-    ``DataFrame.__getitem__`` per group dominates the stage (measured ~1 ms
-    per group vs ~μs of actual work for greedy span suppression)."""
-    parts = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    """Apply ``fn`` to groups of rows sharing ``keys`` with per-batch
+    instead of per-group overhead. ``fn`` receives a *multi-group* frame
+    (every group in it complete, rows key-contiguous), handles grouping
+    internally and returns a DataFrame with columns matching ``schema`` —
+    the fast path for numpy kernels over millions of tiny groups, where
+    even one ``DataFrame.__getitem__`` per group dominates the stage
+    (measured ~1 ms per group vs ~μs of actual work for greedy span
+    suppression). The shuffle has ``defaultParallelism`` parts, one task
+    per core, as ``CheckpointStore.stage`` buckets."""
+    parts = df.sparkSession.sparkContext.defaultParallelism
     rep = df.repartition(parts, *keys).sortWithinPartitions(*keys)
     out_cols = [f.split()[0].strip() for f in schema.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry: pd.DataFrame | None = None
-
-        def apply_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-            if batch:
-                return fn(pdf)[out_cols]
-            outs = [fn(g) for _, g in pdf.groupby(keys, sort=False)]
-            merged = pd.concat(outs, ignore_index=True) if outs else pdf.iloc[0:0]
-            return merged[out_cols]
-
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
@@ -71,8 +57,8 @@ def sorted_grouped_map(
             carry = pdf[tail_mask]
             head = pdf[~tail_mask]
             if not head.empty:
-                yield apply_groups(head)
+                yield fn(head)[out_cols]
         if carry is not None and not carry.empty:
-            yield apply_groups(carry)
+            yield fn(carry)[out_cols]
 
     return rep.mapInPandas(run, schema=schema)

@@ -364,8 +364,8 @@ def make_suppress_batch_fn(cfg: PipelineConfig):
 def suppress_mentions(span_scores: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """O3 greedy suppression -> mentions table.
 
-    Runs as a sorted-partition grouped map (grouped.sorted_grouped_map)
-    in batch mode: one shuffle keyed by turn, one pandas call per Arrow
+    Runs as a sorted-partition grouped map (grouped.sorted_grouped_map):
+    one shuffle keyed by turn, one pandas call per Arrow
     batch, one flat numpy scan per batch — the per-(conv,turn) group count
     is huge and groups are tiny, so per-group pandas dispatch dominated the
     stage (round-2 measurement: ~10 s of a 13 s stage at sf0.1 was group
@@ -374,5 +374,5 @@ def suppress_mentions(span_scores: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     return sorted_grouped_map(
         span_scores, ["conv_id", "turn_idx"], make_suppress_batch_fn(cfg),
-        MENTIONS_SCHEMA, batch=True,
+        MENTIONS_SCHEMA,
     )

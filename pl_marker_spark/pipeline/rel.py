@@ -414,13 +414,13 @@ def _suppress_re_batch(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def suppress_triples(decoded: DataFrame) -> DataFrame:
     """O6 greedy relation suppression per turn (sorted-partition grouped
-    map in batch mode — see ner.suppress_mentions for the many-small-groups
-    rationale; _suppress_re stays as the per-group reference form)."""
+    map — see ner.suppress_mentions for the many-small-groups rationale;
+    _suppress_re stays as the per-group reference form)."""
     from ..grouped import sorted_grouped_map
 
     return sorted_grouped_map(
         decoded, ["conv_id", "turn_idx"], _suppress_re_batch,
-        TRIPLES_RAW_SCHEMA, batch=True,
+        TRIPLES_RAW_SCHEMA,
     )
 
 

@@ -10,6 +10,7 @@ doubles are rounded to 6 decimals; counts are cast to bigint.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4887,6 +4888,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
+@functools.cache  # runs every Python oracle; callers share one dict
 def oracle_sql() -> dict[str, str]:
     from .queries_dataops import DATAOPS_SQLS
 

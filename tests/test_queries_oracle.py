@@ -60,14 +60,14 @@ REFERENCE_ROWS = {
 
 def test_catalog_rows_all_have_twins():
     """Every queries() row has a DuckDB twin and every twin a row: the
-    gate below parametrizes over oracle_sql(), so a row without a twin
+    gate below parametrizes over queries(), so a twin without a row
     would go unchecked. The reference-semantics rows are all present."""
     names = set(queries_catalog.queries())
     assert names == set(queries_catalog.oracle_sql())
     assert REFERENCE_ROWS <= names
 
 
-@pytest.mark.parametrize("name", sorted(queries_catalog.oracle_sql()))
+@pytest.mark.parametrize("name", sorted(queries_catalog.queries()))
 def test_query_matches_duckdb(spark, ddb, name):
     q = queries_catalog.queries()[name]
     sdf = q(spark, SF_DIR)

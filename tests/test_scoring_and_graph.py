@@ -148,12 +148,14 @@ def test_graph_driver_path_equals_spark_path(spark):
     """graph_from_surfaces resolves a vocabulary within its bound on the
     driver; with the bound at 0 every stage is a Spark plan (link join,
     star-path CC, aggregation). Both must return the same rows in all
-    seven tables. The pipeline must also not import the graph oracle, so
-    the kg_graph_* gates keep comparing two independent implementations."""
+    seven tables. Neither the pipeline nor the stream sink may import an
+    oracle module, so the oracle gates keep comparing two independent
+    implementations."""
     import ast
     import pathlib
 
     import pl_marker_spark.pipeline as pipeline_pkg
+    import pl_marker_spark.streaming as streaming
     from pl_marker_spark.pipeline.graph import graph_from_surfaces
 
     surf, trip = _graph_input(spark, ALIAS_VOCAB)
@@ -178,7 +180,8 @@ def test_graph_driver_path_equals_spark_path(spark):
     assert len(rows["edges"]) > 3
 
     pkg = pathlib.Path(pipeline_pkg.__file__).parent
-    for path in pkg.glob("*.py"):
+    paths = [*pkg.glob("*.py"), pathlib.Path(streaming.__file__)]
+    for path in paths:
         for node_ in ast.walk(ast.parse(path.read_text())):
             if isinstance(node_, ast.ImportFrom):
                 names = [node_.module or ""] + [a.name for a in node_.names]
@@ -186,7 +189,8 @@ def test_graph_driver_path_equals_spark_path(spark):
                 names = [a.name for a in node_.names]
             else:
                 continue
-            assert not any("oracle_graph" in n for n in names), path.name
+            parts = [p for n in names for p in n.split(".")]
+            assert not any(p.startswith("oracle_") for p in parts), path.name
 
 
 def test_graph_hot_bucket_takes_the_spark_path(spark, monkeypatch):

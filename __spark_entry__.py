@@ -2,10 +2,10 @@
 
 ``entry(spark)`` runs the flagship KG-extraction pipeline (transcripts →
 packed markers → mentions → fused triples) on a deterministic synthetic
-transcript corpus. ``queries()``/``oracle_sql()`` expose the catalog's 131
+transcript corpus. ``queries()``/``oracle_sql()`` expose the catalog's 121
 rows, each with a DuckDB twin: the KG pipeline's outputs and the queries
 over them (``kg_*``, twinned by the Python oracle rendered as VALUES), the
-reference-semantics operators, and the corpus-curation, near-dup, ANN,
+reference-semantics operators, and the corpus-curation, near-dup,
 tokenizer and media operators over the driver's parquet tables.
 """
 

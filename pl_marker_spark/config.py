@@ -101,7 +101,6 @@ class PipelineConfig:
     segment_turns: int = 0               # >0: segmented window assembly for
                                          # unbounded conversations (exact; see
                                          # spanpack.spanpack_ner_segmented)
-    salt_buckets: int = 8                # skew salting for turn-level grouped maps
     assemble_tensors: bool = False       # build K5 marker tensors inside the inference
                                          # UDF (parity demo; surrogate does not need them)
 
@@ -134,5 +133,4 @@ TEST_CONFIG = PipelineConfig(
     max_seq_length_re=64,
     max_pair_length_ner=16,
     max_pair_length_re=4,
-    salt_buckets=2,
 )

@@ -1043,233 +1043,6 @@ FROM shared JOIN sizes s ON s.doc_id = shared.src_doc
 """
 
 
-def q_ann_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k similarity search over the embedding column
-    (baseline ANN; the LSH-bucketed variant is `minhash_neardup`)."""
-    e = _doc(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    dot = F.aggregate(F.zip_with("qv", "v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    nq = F.sqrt(F.aggregate(F.transform("qv", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nv = F.sqrt(F.aggregate(F.transform("v", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    sims = (
-        q.crossJoin(e)
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .select("q_id", "vec_id", (dot / (nq * nv)).alias("sim"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
-    return (
-        sims.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("q_id", "vec_id", F.round("sim", 6).alias("sim"),
-                F.col("rk").cast("long").alias("rk"))
-    )
-
-
-KNN_K = 5
-
-
-def q_knn_mutual_graph(spark, sf_dir):
-    """Mutual-kNN graph over the embedding column — the
-    semantic-clustering prepass (each doc's top-K cosine neighbors;
-    keep the pair only when BOTH directions agree): mutual-kNN edges
-    are the standard robust input to clustering / dedup seeding because
-    a hub vector that floods one-directional kNN lists cannot create
-    mutual edges with everything. One row per mutual pair (a < b) with
-    the cosine and both directed ranks.
-
-    Plan: the pairwise score matrix is computed ONCE over (i, j) with
-    i≠j (JVM higher-order dot/norms, no UDF), per-source top-K via a
-    rank window bounded by the per-source candidate count, and the
-    mutual join is two independent projections of the MATERIALIZED kNN
-    list (the Spark 4.1 same-instance self-join trap — see
-    _resolved_triple_sites). Brute N² is the gate shape at 500 vectors;
-    the production candidate generator is the IVF within-cell join the
-    gated semdedup/ann_ivf rows already exercise, with this exact
-    rank+mutual tail re-ranking the bucketed candidates."""
-    e = _doc(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double"))
-        .alias("v"))
-    a = e.select(F.col("vec_id").alias("src"), F.col("v").alias("av"))
-    b = e.select(F.col("vec_id").alias("dst"), F.col("v").alias("bv"))
-    dot = F.aggregate(F.zip_with("av", "bv", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(F.transform("av", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(F.transform("bv", lambda x: x * x),
-                            F.lit(0.0), lambda acc, x: acc + x))
-    sims = (a.crossJoin(b).filter(F.col("src") != F.col("dst"))
-            .select("src", "dst", (dot / (na * nb)).alias("sim")))
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), "dst")
-    knn = (sims.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") <= KNN_K).localCheckpoint())
-    x = knn.select(F.col("src").alias("a_id"), F.col("dst").alias("b_id"),
-                   "sim", F.col("rk").alias("rank_ab"))
-    y = knn.select(F.col("dst").alias("a_id"), F.col("src").alias("b_id"),
-                   F.col("rk").alias("rank_ba"))
-    return (x.join(y, ["a_id", "b_id"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id", F.round("sim", 6).alias("sim"),
-                    F.col("rank_ab").cast("long").alias("rank_ab"),
-                    F.col("rank_ba").cast("long").alias("rank_ba")))
-
-
-SQL_KNN_MUTUAL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-s AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-             list_dot_product(a.v, b.v) /
-             (sqrt(list_dot_product(a.v, a.v)) *
-              sqrt(list_dot_product(b.v, b.v))) AS sim
-      FROM e a, e b WHERE a.vec_id != b.vec_id),
-r AS (SELECT src, dst, sim,
-             row_number() OVER (PARTITION BY src
-                                ORDER BY sim DESC, dst) AS rk
-      FROM s),
-k AS (SELECT * FROM r WHERE rk <= {KNN_K})
-SELECT x.src AS a_id, x.dst AS b_id, round(x.sim, 6) AS sim,
-       x.rk::BIGINT AS rank_ab, y.rk::BIGINT AS rank_ba
-FROM k x JOIN k y ON x.src = y.dst AND x.dst = y.src
-WHERE x.src < x.dst
-"""
-
-
-SQL_ANN = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 5),
-s AS (SELECT q_id, vec_id,
-             list_dot_product(qv, v) /
-             (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS sim
-      FROM q, e WHERE q_id != vec_id),
-r AS (SELECT q_id, vec_id, sim,
-             row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rk
-      FROM s)
-SELECT q_id, vec_id, round(sim, 6) AS sim, rk::BIGINT AS rk
-FROM r WHERE rk <= 10
-"""
-
-
-def _q_ann_ivf(spark, sf_dir):
-    """IVF ANN scale path (seed-init + one distributed Lloyd step,
-    nprobe=2) — see ann_ivf.py for the plan shape and recall numbers."""
-    from .ann_ivf import q_ann_ivf_topk
-
-    return q_ann_ivf_topk(spark, sf_dir)
-
-
-def _sql_ann_ivf() -> str:
-    from .ann_ivf import SQL_ANN_IVF
-
-    return SQL_ANN_IVF
-
-
-def _q_semdedup(spark, sf_dir):
-    """SemDeDup: cluster-scoped semantic dedup on the shared IVF
-    quantizer — see ann_ivf.semdedup for the plan shape."""
-    from .ann_ivf import q_semdedup
-
-    return q_semdedup(spark, sf_dir)
-
-
-def _sql_semdedup() -> str:
-    from .ann_ivf import SQL_SEMDEDUP
-
-    return SQL_SEMDEDUP
-
-
-def _q_sq_encode(spark, sf_dir):
-    """int8 scalar-quantization encode law (exact-integer gate) — see
-    ann_ivf.q_sq_encode for the code math and parity argument."""
-    from .ann_ivf import q_sq_encode
-
-    return q_sq_encode(spark, sf_dir)
-
-
-def _q_sq_ann_topk(spark, sf_dir):
-    """Asymmetric-distance top-k over int8 SQ codes (Jegou et al. 2011
-    ADC) — the 4x-smaller storage side of ANN; see ann_ivf.q_sq_ann_topk."""
-    from .ann_ivf import q_sq_ann_topk
-
-    return q_sq_ann_topk(spark, sf_dir)
-
-
-def _q_ivf_sq_topk(spark, sf_dir):
-    """IVF x SQ composed (the FAISS IVF,SQ8 shape): probe-pruned scan
-    over int8-coded inverted lists — see ann_ivf.ivf_sq_topk."""
-    from .ann_ivf import q_ivf_sq_topk
-
-    return q_ivf_sq_topk(spark, sf_dir)
-
-
-def _sql_ivf_sq() -> str:
-    from .ann_ivf import SQL_IVF_SQ
-
-    return SQL_IVF_SQ
-
-
-def _q_pq_encode(spark, sf_dir):
-    """Product-quantization encode law (M=4 subspaces x K=16 centroids,
-    16-bit codes): exact-integer code assignments + rounded per-subspace
-    distortion — see pq.q_pq_encode for the codebook-train parity
-    argument."""
-    from .pq import q_pq_encode
-
-    return q_pq_encode(spark, sf_dir)
-
-
-def _q_pq_ann_topk(spark, sf_dir):
-    """PQ ADC top-k: broadcast (subspace, code) lookup table + groupBy
-    sum — the corpus scan touches only integer codes; see
-    pq.pq_ann_topk."""
-    from .pq import q_pq_ann_topk
-
-    return q_pq_ann_topk(spark, sf_dir)
-
-
-def _sql_pq_encode() -> str:
-    from .pq import SQL_PQ_ENCODE
-
-    return SQL_PQ_ENCODE
-
-
-def _sql_pq_ann() -> str:
-    from .pq import SQL_PQ_ANN
-
-    return SQL_PQ_ANN
-
-
-def _q_ivf_pq_topk(spark, sf_dir):
-    """IVF x PQ composed (the FAISS IVF,PQ shape, by_residual=False):
-    probe-pruned scan over integer PQ codes via the broadcast LUT —
-    see pq.ivf_pq_topk."""
-    from .pq import q_ivf_pq_topk
-
-    return q_ivf_pq_topk(spark, sf_dir)
-
-
-def _sql_ivf_pq_s() -> str:
-    from .pq import _sql_ivf_pq
-
-    return _sql_ivf_pq()
-
-
-def _sql_sq_encode() -> str:
-    from .ann_ivf import SQL_SQ_ENCODE
-
-    return SQL_SQ_ENCODE
-
-
-def _sql_sq_ann() -> str:
-    from .ann_ivf import SQL_SQ_ANN
-
-    return SQL_SQ_ANN
-
-
 # ---------- model-dependent entries (oracle = materialized python oracle) --
 # The packed-marker pipeline is the engine under test — its DuckDB twin is
 # the single-process oracle (oracle_ref + oracle_graph) rendered as a VALUES
@@ -4791,7 +4564,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_re_examples": q_kg_re_examples,
         "kg_ner_examples": q_kg_ner_examples,
         "tool_transitions": q_tool_transitions,
-        "semdedup": _q_semdedup,
         "multimodal_resize": q_multimodal_resize,
         "o17_coref_conll": q_o17_coref_conll,
         "o17_coref_metrics": q_o17_coref_metrics,
@@ -4799,8 +4571,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_buckets": q_simhash_buckets,
         "simhash_hamming": q_simhash_hamming,
         "embedding_neardup": q_embedding_neardup,
-        "ann_ivf_topk": _q_ann_ivf,
-        "ann_cosine_topk": q_ann_cosine_topk,
         "kg_reachability": q_kg_reachability,
         "kg_best_chain": q_kg_best_chain,
         "kg_embed_eval": q_kg_embed_eval,
@@ -4816,13 +4586,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_bgp_match": q_kg_bgp_match,
         "kg_type_violations": q_kg_type_violations,
         "kg_ntriples_roundtrip": q_kg_ntriples_roundtrip,
+        "kg_khop_subgraph": q_kg_khop_subgraph,
+        "kg_min_cost_path": q_kg_min_cost_path,
+        "kg_hits": q_kg_hits,
     }
     assert len(head) == 50, f"driver window misaligned: {len(head)}"
     return {
         **head,
-        "kg_khop_subgraph": q_kg_khop_subgraph,
-        "kg_min_cost_path": q_kg_min_cost_path,
-        "kg_hits": q_kg_hits,
         "kg_edge_intervals": q_kg_edge_intervals,
         "kg_edge_decay": q_kg_edge_decay,
         "kg_pred_cardinality": q_kg_pred_cardinality,
@@ -4835,7 +4605,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_conf_calibration": q_kg_conf_calibration,
         "kg_cc_incremental": q_kg_cc_incremental,
         "kg_gold_relations": q_kg_gold_relations,
-        "knn_mutual_graph": q_knn_mutual_graph,
         "bpe_encode": DATAOPS_QUERIES["bpe_encode"],
         "bigram_lm_ce": DATAOPS_QUERIES["bigram_lm_ce"],
         "jsd_drift": DATAOPS_QUERIES["jsd_drift"],
@@ -4846,9 +4615,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pmi_pairs": DATAOPS_QUERIES["pmi_pairs"],
         "bpe_train": DATAOPS_QUERIES["bpe_train"],
         "unigram_train": DATAOPS_QUERIES["unigram_train"],
-        "sq_ann_topk": _q_sq_ann_topk,
         "dup_span_merge": q_dup_span_merge,
-        "pq_ann_topk": _q_pq_ann_topk,
         "containment_neardup": q_containment_neardup,
         "kg_triples_levpair": q_kg_triples_levpair,
         "kg_mentions_roberta": q_kg_mentions_roberta,
@@ -4869,10 +4636,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "o8_inverse_gold": q_o8_inverse_gold,
         "o13_topk": q_o13_topk,
         "weighted_sample": DATAOPS_QUERIES["weighted_sample"],
-        "ivf_sq_topk": _q_ivf_sq_topk,
-        "sq_encode": _q_sq_encode,
-        "pq_encode": _q_pq_encode,
-        "ivf_pq_topk": _q_ivf_pq_topk,
         "multimodal_phash": q_multimodal_phash,
         "multimodal_audiofp": q_multimodal_audiofp,
         "simhash_hamming_k5": q_simhash_hamming_k5,
@@ -4917,21 +4680,11 @@ def oracle_sql() -> dict[str, str]:
         "substr_dedup": SQL_SUBSTR_DEDUP,
         "dup_span_merge": SQL_DUP_SPAN_MERGE,
         "containment_neardup": SQL_CONTAINMENT,
-        "ann_cosine_topk": SQL_ANN,
-        "knn_mutual_graph": SQL_KNN_MUTUAL,
-        "ann_ivf_topk": _sql_ann_ivf(),
-        "semdedup": _sql_semdedup(),
         "minhash_neardup": _sql_minhash(),
         "simhash_buckets": _sql_simhash_buckets(),
         "simhash_hamming": _sql_simhash_hamming(),
         "simhash_hamming_k5": _sql_simhash_hamming(5),
         "embedding_neardup": _sql_embedding_neardup(),
-        "sq_encode": _sql_sq_encode(),
-        "sq_ann_topk": _sql_sq_ann(),
-        "ivf_sq_topk": _sql_ivf_sq(),
-        "pq_encode": _sql_pq_encode(),
-        "pq_ann_topk": _sql_pq_ann(),
-        "ivf_pq_topk": _sql_ivf_pq_s(),
         "retention_cohorts": SQL_RETENTION,
         "kg_canonical_alias": _sql_kg_canonical_alias(),
         "kg_export_ntriples": _sql_kg_export_ntriples(),

@@ -523,9 +523,9 @@ _BM25_TOPK = 10
 
 
 def q_bm25_topk(spark, sf_dir):
-    """BM25 lexical top-k retrieval over the documents corpus — the keyword
-    twin of `ann_cosine_topk`. Scale shape: document lengths and avgdl come
-    from a JVM-side ``size(split(...))`` with NO explode (a scan, then a
+    """BM25 lexical top-k retrieval over the documents corpus. Scale
+    shape: document lengths and avgdl come from a JVM-side
+    ``size(split(...))`` with NO explode (a scan, then a
     1-row aggregate that broadcasts); the token stream is semi-joined
     against the broadcast query-term table BEFORE any aggregation, so the
     only shuffle carries (q_id, term, doc_id) for MATCHING tokens — at

@@ -1,7 +1,9 @@
 """The SQL-facing surface: pipeline outputs queryable via spark.sql, plus
-eval_logsoftmax score-path parity with the oracle."""
+the eval_logsoftmax / eval_softmax score-path parity with the oracle."""
 
 from dataclasses import replace
+
+import pytest
 
 from pl_marker_spark import synth
 from pl_marker_spark.config import DEFAULT_CONFIG
@@ -31,8 +33,9 @@ def test_sql_views_and_analyses(spark):
     assert sym.count() > 0
 
 
-def test_eval_logsoftmax_matches_oracle(spark):
-    cfg = replace(DEFAULT_CONFIG, eval_logsoftmax=True)
+@pytest.mark.parametrize("flag", ["eval_logsoftmax", "eval_softmax"])
+def test_eval_score_transform_matches_oracle(spark, flag):
+    cfg = replace(DEFAULT_CONFIG, **{flag: True})
     corpus = synth.local_corpus(8)
     want = {
         (c, t, s1, e1, s2, e2, p, round(sc, 9))

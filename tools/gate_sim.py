@@ -1,18 +1,21 @@
-"""Driver-gate simulation: every queries() entry vs its oracle_sql() twin
-at sf0.01, rows+schema+hash, written as a CORRECTNESS-style JSON.
+"""Driver-gate simulation: queries() entries vs their oracle_sql() twins,
+rows+schema+hash, under the driver's compare discipline (column sort by
+name, float round-6, row sort).
 
-The driver only checks the first 50 queries() entries; this runs ALL of
-them (131) under the same compare discipline (column sort
-by name, float round-6, row sort), so the full catalog has a local
-driver-equivalent record. Run from the repo root:
+The driver only checks the first 50 queries() entries; with no NAME this
+runs ALL of them and writes tools/gate_sim.json, a CORRECTNESS-style
+record of the full catalog. With NAMEs it checks only those rows and
+writes nothing. Run from the repo root:
 
-    PYTHONPATH=. python tools/gate_sim.py [SF_DIR] [OUT_JSON]
+    PYTHONPATH=. python tools/gate_sim.py [SF_DIR [NAME ...]]
 
-Exit status 1 if any twin mismatches."""
+Prints PASS/FAIL per row, with the Counter diff of the canonical rows for
+a failure. Exit status 1 if any twin mismatches."""
 import json
 import math
 import os
 import sys
+from collections import Counter
 
 import duckdb
 
@@ -20,8 +23,8 @@ from pl_marker_spark import queries_catalog as qc
 from pl_marker_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-    os.path.dirname(__file__), "gate_sim.json")
+NAMES = sys.argv[2:]
+OUT = os.path.join(os.path.dirname(__file__), "gate_sim.json")
 spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 con = duckdb.connect()
@@ -42,20 +45,14 @@ def canon(rows, cols):
     return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
-out = {}
-qs = qc.queries()
-oracles = qc.oracle_sql()
-
-
-def run_once(name, connection=None):
-    connection = connection or con
+def check(name):
     rec = {"rows_match": False, "schema_match": False, "hash_match": False,
            "err": None}
     try:
         sdf = qs[name](spark, SF)
         srows = [tuple(r) for r in sdf.collect()]
         scols = sdf.columns
-        res = connection.execute(oracles[name])
+        res = con.execute(oracles[name])
         dcols = [d[0] for d in res.description]
         drows = res.fetchall()
         rec["spark_rows"] = len(srows)
@@ -65,17 +62,8 @@ def run_once(name, connection=None):
         sc, dc = canon(srows, scols), canon(drows, dcols)
         rec["hash_match"] = sc == dc
         if not rec["hash_match"]:
-            # diagnosable artifact for an intermittent mismatch: the
-            # symmetric row difference (a session-13/14 kg_edge_intervals
-            # anomaly failed in ONE long-lived session, passed in every
-            # fresh process — without the differing rows there is nothing
-            # to root-cause)
-            # Counter-based diff (round-6, ADVICE): set-membership hid
-            # multiplicity-only mismatches (same rows, different dup
-            # counts) as two empty lists — exactly the nothing-to-root-
-            # cause situation this diagnostic exists to avoid
-            from collections import Counter
-
+            # multiset diff: a set-membership diff shows a mismatch in
+            # duplicate counts alone as two empty lists
             s_extra = Counter(sc) - Counter(dc)
             d_extra = Counter(dc) - Counter(sc)
             rec["only_spark"] = [list(map(str, r))
@@ -87,50 +75,22 @@ def run_once(name, connection=None):
     return rec
 
 
-for name in qs:
-    rec = run_once(name)
-    ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
-    if not ok:
-        # Retry ladder for intermittent anomalies (kg_edge_intervals:
-        # failed BOTH attempts inside one long-lived session, green in
-        # every fresh process and every other replay): retry #1 re-runs
-        # both sides as-is; retry #2 rebuilds the DuckDB side on a FRESH
-        # connection+views, so a pass there implicates accumulated
-        # DuckDB session state while a persistent fail points at the
-        # Spark side. Whichever retry passes is recorded loudly with the
-        # failing attempt (incl. its differing rows) preserved.
-        rec2 = run_once(name)
-        if rec2["rows_match"] and rec2["schema_match"] and rec2["hash_match"]:
-            rec2["flaky_first_attempt"] = rec
-            rec = rec2
-            ok = True
-            print("FLAKY-PASS", name, "first attempt mismatched, retry clean",
-                  flush=True)
-        else:
-            con2 = duckdb.connect()
-            for t in ("region nation customer supplier part orders lineitem "
-                      "events documents embeddings").split():
-                con2.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                             f"read_parquet('{SF}/{t}.parquet')")
-            rec3 = run_once(name, con2)
-            con2.close()
-            if (rec3["rows_match"] and rec3["schema_match"]
-                    and rec3["hash_match"]):
-                rec3["flaky_first_attempt"] = rec
-                rec3["flaky_second_attempt"] = rec2
-                rec3["passed_on"] = "fresh_duckdb_connection"
-                rec = rec3
-                ok = True
-                print("FLAKY-PASS", name,
-                      "both shared-connection attempts mismatched, "
-                      "fresh-connection retry clean", flush=True)
+qs = qc.queries()
+oracles = qc.oracle_sql()
+out = {}
+for name in NAMES or qs:
+    rec = check(name)
     out[name] = rec
-    if not (rec.get("flaky_first_attempt") and ok):
-        print(("PASS" if ok else "FAIL"), name, rec.get("spark_rows"),
-              rec["err"] or "", flush=True)
+    ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+    print(("PASS" if ok else "FAIL"), name, rec.get("spark_rows"),
+          rec.get("oracle_rows"), rec["err"] or "", flush=True)
+    if not ok and "only_spark" in rec:
+        print("  only_spark:", rec["only_spark"])
+        print("  only_oracle:", rec["only_oracle"])
 
-with open(OUT, "w") as f:
-    json.dump(out, f, indent=1)
+if not NAMES:
+    with open(OUT, "w") as f:
+        json.dump(out, f, indent=1)
 bad = [k for k, v in out.items()
        if not (v["rows_match"] and v["schema_match"] and v["hash_match"])]
 print("TOTAL", len(out), "BAD", len(bad), bad)
